@@ -14,7 +14,7 @@ Layout:
     session     SparkSession factory (AQE, Arrow, sane shuffle defaults)
     sources     parquet/TSV readers, Canvas schema -> StructType, catalog
     operators   composite relational ops (as-of join, dedup, similarity, text)
-    ingest      manifest reconciler (the reference's sync core, Spark-native)
+    ingest      manifest reconciler (the reference's sync core) and compaction
     streaming   Structured Streaming slice (file source, windows, dedup)
     plans       the named query registry backing __spark_entry__.py
 """

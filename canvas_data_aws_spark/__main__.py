@@ -18,8 +18,8 @@ the named query registry:
 
 ``sync`` resolves credentials secret-file-first/env-fallback (the
 reference's secrets path), pulls the snapshot manifest from the API, and
-converges the local lake via the declarative reconciler; every fetch is
-HMAC-signed. Exit code is 0 on success, 2 on bad usage, 1 on failure.
+converges the local lake via the reconciler (a driver-side plan, then a
+thread pool of fetches and deletes); every fetch is HMAC-signed. Exit code is 0 on success, 2 on bad usage, 1 on failure.
 """
 
 from __future__ import annotations

@@ -9,7 +9,7 @@ Data 1 REST API so the engine has no SDK dependency:
 
 - ``GET /api/account/self/file/sync``  -> ``{"files": [{table, filename,
   url, ...}], "schemaVersion": ...}`` — the full-snapshot manifest the
-  reconciler consumes (``manifest_from_rows``).
+  reconciler consumes (``SyncEngine.apply``).
 - ``GET /api/schema/<version>``        -> ``{"version": ..., "schema":
   {table: {tableName, columns: [...]}}}`` — the type source for
   ``sources.schema.schema_registry`` / DDL.
@@ -26,8 +26,8 @@ leaked request cannot be replayed elsewhere or later.
 Scale/architecture notes: the API surface is metadata-only (file listings
 and schema documents, a few MB at most), so the client is a plain
 driver-side component — the actual data-plane transfer of the signed S3
-URLs it returns happens on executors via ``http_fetcher`` inside
-``SyncEngine.apply``. File URLs are pre-signed by the API (no auth header
+URLs it returns happens in ``SyncEngine.apply``'s fetch thread pool via
+``http_fetcher``. File URLs are pre-signed by the API (no auth header
 on the download itself), exactly like the reference worker's plain
 ``requests.get`` of ``file_url`` (fetch-canvas-data-file.py:33).
 """
@@ -142,7 +142,7 @@ class CanvasDataClient:
 
     def sync_manifest_rows(self) -> list[dict]:
         """``get_sync_file_urls`` flattened to the reconciler's row shape —
-        feeds ``manifest_from_rows`` / ``SyncEngine.apply`` directly."""
+        feeds ``SyncEngine.apply`` directly."""
         files = self.get_sync_file_urls().get("files", [])
         return [
             {"table": f["table"], "filename": f["filename"], "url": f.get("url")}

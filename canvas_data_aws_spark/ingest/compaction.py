@@ -61,10 +61,11 @@ def compact_raw_tsv(
     target_rows_per_file: int = 1_000_000,
 ) -> DataFrame:
     """gzip TSV table directory -> curated Parquet; returns the curated
-    DataFrame for verification."""
+    DataFrame for verification, read back with the known ``schema`` so no
+    job re-infers it from the footers."""
     raw = read_tsv_gzip(spark, raw_table_dir, schema)
     compact_table(raw, out_path, partition_by, target_rows_per_file)
-    return spark.read.parquet(out_path)
+    return spark.read.schema(schema).parquet(out_path)
 
 
 def zorder_value(cols: list[Column], bits: int = 16) -> Column:

@@ -15,8 +15,9 @@ plus the two productionizations a long pull over a flaky network needs:
   ``dest`` is atomic, so the reconciler's idempotence guard
   (fetch-canvas-data-file.py:25-31) never sees a half-written file as done.
 
-Fetchers are plain picklable callables ``(url, dest) -> None`` so the
-distributed apply path can ship them to executors (reconciler._apply_worker).
+Fetchers are plain callables ``(url, dest) -> None`` with no shared mutable
+state, so ``SyncEngine.apply``'s thread pool can run many at once
+(``reconciler.apply_file`` is the per-file body that calls them).
 """
 
 from __future__ import annotations

@@ -1,110 +1,121 @@
-"""The sync engine: manifest reconciliation as one declarative join.
+"""The sync engine: manifest reconciliation as a set difference on the driver.
 
-The reference's sync core (/root/reference/lambda/sync-canvas-data-files.py:58-112)
-is an imperative diff: remote files not present locally are fetched, local
-keys no longer listed remotely are deleted, matches are skipped. That is
-exactly a full-outer join on file key with a three-way verdict (SURVEY.md §2
-Part A observations) — one Spark expression instead of a fan-out of worker
-invocations:
+The reference's sync core (lambda/sync-canvas-data-files.py:58-112) is an
+imperative diff: remote files not present locally are fetched, local keys no
+longer listed remotely are deleted, matches are skipped. Here that diff is a
+dict of remote keys against a set of local keys, with a three-way verdict:
 
-    remote ⟗ local on key:
-        both sides  -> 'skip'    (:62-67)
-        remote only -> 'fetch'   (:69-84)
-        local only  -> 'delete'  (:104-112)
+    remote ∩ local -> 'skip'    (:62-67)
+    remote only    -> 'fetch'   (:69-84)
+    local only     -> 'delete'  (:104-112)
 
 Scale: manifests are metadata (one row per *file*, not per record), so even
-a 100 TB lake is a few million manifest rows — the reconciliation join is
-trivially broadcastable on either side; fetch execution parallelism comes
-from partitioning the fetch list across executors (the Spark-native analog
-of one-Lambda-per-file, :78-84).
+a 100 TB lake is a few million keys, which a dict and a set on the driver
+diff in seconds. Fetches are I/O-bound, so ``apply`` runs the work list in
+one thread pool of ``max_fetch_tasks x io_threads`` workers, the analog of
+one-Lambda-per-file (:78-84). The DataFrame form of the same verdicts,
+``plans.ingest_q.reconcile``, backs the registry's SQL examples.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import os
+from collections import Counter
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql.types import StringType, StructField, StructType
-
-MANIFEST_SCHEMA = StructType(
-    [
-        StructField("table", StringType(), False),
-        StructField("filename", StringType(), False),
-        StructField("url", StringType(), True),
-    ]
-)
+from typing import NamedTuple
 
 #: Layout rule: every file lives under its table's directory
 #: (key construction, sync-canvas-data-files.py:60).
 RAW_PREFIX = "raw_files/"
 
 
-def manifest_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    """Remote manifest as a DataFrame (source_remote_manifest: the API's
-    {'files': [{table, filename, url}]} listing, sync-canvas-data-files.py:46-48)."""
-    return spark.createDataFrame(
-        [Row(table=r["table"], filename=r["filename"], url=r.get("url")) for r in rows],
-        MANIFEST_SCHEMA,
-    )
+class PlanRow(NamedTuple):
+    """One reconciled file: the columns of ``plans.ingest_q.reconcile``.
+    ``table``, ``filename`` and ``url`` are None for a 'delete'."""
+
+    key: str
+    table: str | None
+    filename: str | None
+    url: str | None
+    verdict: str
 
 
-def with_key(manifest: DataFrame, prefix: str = RAW_PREFIX) -> DataFrame:
-    """partition_by_table: key = '{prefix}{table}/{filename}'."""
-    return manifest.withColumn(
-        "key", F.concat(F.lit(prefix), F.col("table"), F.lit("/"), F.col("filename"))
-    )
-
-
-def local_listing(spark: SparkSession, root: str, prefix: str = RAW_PREFIX) -> DataFrame:
+def local_listing(root: str, prefix: str = RAW_PREFIX) -> set[str]:
     """source_local_listing: existing object keys under the prefix
     (the S3 listing at sync-canvas-data-files.py:38-43). Local-FS flavor:
-    walk ``root`` and emit relative keys. Listing is metadata-scale, so a
-    driver-side walk then parallelize is the honest equivalent of the
-    reference's paginated list_objects."""
-    import os
-
-    keys = []
+    walk ``root`` and return relative keys."""
     base = os.path.join(root, prefix)
-    for dirpath, _dirs, files in os.walk(base):
-        for fn in sorted(files):
-            rel = os.path.relpath(os.path.join(dirpath, fn), root)
-            keys.append(Row(key=rel.replace(os.sep, "/")))
-    return spark.createDataFrame(keys, StructType([StructField("key", StringType(), False)]))
+    return {
+        os.path.relpath(os.path.join(dirpath, fn), root).replace(os.sep, "/")
+        for dirpath, _dirs, files in os.walk(base)
+        for fn in files
+    }
 
 
-def reconcile(
-    remote: DataFrame,
-    local: DataFrame,
+def plan_verdicts(
+    remote_rows: Iterable[dict],
+    local_keys: set[str],
     prefix: str = RAW_PREFIX,
     additive: bool = False,
-) -> DataFrame:
-    """diff_fetch_set + diff_delete_set as ONE join.
+) -> list[PlanRow]:
+    """diff_fetch_set + diff_delete_set over a remote manifest
+    (source_remote_manifest: the API's ``{'files': [{table, filename, url}]}``
+    listing, sync-canvas-data-files.py:46-48) and the local key set.
 
-    Mirror mode (default): full-outer join; verdict in ('skip', 'fetch',
-    'delete') — converge local to exactly the remote snapshot. The two
-    anti-joins of the reference fall out of one exchange instead of two.
+    Mirror mode (default): verdict in ('skip', 'fetch', 'delete') — converge
+    local to exactly the remote snapshot.
 
-    Additive mode (``additive=True``): left join from the remote manifest;
-    verdict in ('skip', 'fetch') only. This is the dump-incremental
-    contract — a dump manifest lists just that dump's files, so local files
-    it doesn't mention (other tables, earlier dumps) are NOT deletions.
+    Additive mode (``additive=True``): verdict in ('skip', 'fetch') only.
+    This is the dump-incremental contract — a dump manifest lists just that
+    dump's files, so local files it doesn't mention (other tables, earlier
+    dumps) are NOT deletions.
     """
-    r = with_key(remote, prefix).alias("r")
-    l = local.select(F.col("key").alias("lkey")).alias("l")
-    how = "left_outer" if additive else "full_outer"
-    joined = r.join(l, F.col("r.key") == F.col("l.lkey"), how)
-    verdict = F.when(F.col("l.lkey").isNull(), F.lit("fetch"))
+    remote = {f"{prefix}{r['table']}/{r['filename']}": r for r in remote_rows}
+    plan = [
+        PlanRow(
+            key, r["table"], r["filename"], r.get("url"),
+            "skip" if key in local_keys else "fetch",
+        )
+        for key, r in remote.items()
+    ]
     if not additive:
-        verdict = verdict.when(F.col("r.key").isNull(), F.lit("delete"))
-    return joined.select(
-        F.coalesce(F.col("r.key"), F.col("l.lkey")).alias("key"),
-        F.col("r.table").alias("table"),
-        F.col("r.filename").alias("filename"),
-        F.col("r.url").alias("url"),
-        verdict.otherwise(F.lit("skip")).alias("verdict"),
-    )
+        plan += [
+            PlanRow(key, None, None, None, "delete")
+            for key in sorted(local_keys - remote.keys())
+        ]
+    return plan
+
+
+def apply_file(root: str, row: PlanRow, fetcher: Callable[[str, str], None]) -> str:
+    """The per-file body of ``apply``: one work row in, one action out.
+
+    The idempotence guard lives here, exactly like the reference worker's
+    existence check (fetch-canvas-data-file.py:25-31): a 'fetch' whose
+    destination already exists skips without calling ``fetcher``. Deletes
+    are the mirror semantics of sync-canvas-data-files.py:104-112.
+
+    Per-file failure ISOLATION, matching the reference's one-Lambda-per-file
+    blast radius: a raise is reported as its own action instead of aborting
+    the sync. The file stays absent, so the NEXT converge run re-plans it as
+    a fetch — eventual consistency through idempotent re-runs.
+    """
+    dest = os.path.join(root, row.key)
+    try:
+        if row.verdict == "delete":
+            if os.path.exists(dest):
+                os.remove(dest)
+                return "deleted"
+            return "already absent"
+        if os.path.exists(dest):
+            return "skip (exists)"
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        fetcher(row.url, dest)
+        return "fetched"
+    except Exception as e:  # noqa: BLE001 — isolate ANY per-file failure
+        return f"failed ({type(e).__name__})"
 
 
 @dataclass
@@ -134,220 +145,121 @@ class SyncEngine:
     """Snapshot-mirror sync: converge local state to the remote manifest.
 
     ``fetcher(url, dest_path) -> None`` is pluggable (tests copy local
-    files; production would stream HTTPS — the worker body of
-    fetch-canvas-data-file.py:14-42). ``dry_run`` logs intent without side
-    effects (the reference's env-flag mode, sync-canvas-data-files.py:15).
+    files; production streams HTTPS — the worker body of
+    fetch-canvas-data-file.py:14-42) and must be safe to call from several
+    threads at once. ``dry_run`` logs intent without side effects (the
+    reference's env-flag mode, sync-canvas-data-files.py:15).
     """
 
     root: str
     prefix: str = RAW_PREFIX
     dry_run: bool = False
     fetch_chunk_bytes: int = 8 * 1024 * 1024  # worker chunk size parity (:20)
-    max_fetch_tasks: int = 16  # Spark tasks the work list spreads over
-    io_threads: int = 8  # concurrent fetches within one task (I/O-bound)
+    #: fetch concurrency is max_fetch_tasks x io_threads pool workers
+    max_fetch_tasks: int = 16
+    io_threads: int = 8
     on_summary: Callable[["SyncSummary"], None] | None = None  # sink_notify
     log_sample_cap: int = 10_000  # max per-file lines the driver retains
     #: continuation_reinvoke analog (sync-canvas-data-files.py:88-98): the
     #: reference re-invokes itself when <30 s of Lambda budget remain,
-    #: paginating the work list cursor-free across invocations. Spark jobs
-    #: have no 15-minute bound, but the SAME bounded-converge contract is
-    #: useful (maintenance windows, rate-limited origins): cap the files
-    #: applied per run; reconciliation is idempotent, so repeated runs
-    #: converge — each run re-plans and the already-fetched prefix verdicts
-    #: 'skip'. None = unbounded (single-run converge). Starvation guard:
-    #: a naive key-ordered prefix would re-dispatch the SAME low-keyed
-    #: files every run, so >= max_files_per_run permanently-failing
-    #: low-keyed files would starve all later-keyed work forever. Bounded
-    #: runs therefore persist the keys that failed (``FAILED_KEYS_FILE``
-    #: under the lake root, capped at ``FAILED_KEYS_CAP``) and sort them
-    #: AFTER fresh work in the next run's prefix — failing files still
-    #: retry (eventually, when fresh work drains), but can never pin the
-    #: prefix. The ledger drops a key the run it succeeds and is deleted
-    #: when a run converges cleanly.
+    #: paginating the work list cursor-free across invocations. The SAME
+    #: bounded-converge contract is useful here (maintenance windows,
+    #: rate-limited origins): cap the files applied per run; reconciliation
+    #: is idempotent, so repeated runs converge — each run re-plans and the
+    #: already-fetched prefix verdicts 'skip'. None = unbounded (single-run
+    #: converge). Starvation guard: a naive key-ordered prefix would
+    #: re-dispatch the SAME low-keyed files every run, so >=
+    #: max_files_per_run permanently-failing low-keyed files would starve
+    #: all later-keyed work forever. Bounded runs therefore persist the keys
+    #: that failed (``FAILED_KEYS_FILE`` under the lake root, capped at
+    #: ``FAILED_KEYS_CAP``) and sort them AFTER fresh work in the next run's
+    #: prefix — failing files still retry (eventually, when fresh work
+    #: drains), but can never pin the prefix. The ledger drops a key the run
+    #: it succeeds and is deleted when a run converges cleanly.
     max_files_per_run: int | None = None
     log: list[str] = field(default_factory=list)
 
-    def plan(
-        self,
-        spark: SparkSession,
-        remote_rows: list[dict],
-        additive: bool = False,
-    ) -> DataFrame:
-        remote = manifest_from_rows(spark, remote_rows)
-        local = local_listing(spark, self.root, self.prefix)
-        return reconcile(remote, local, self.prefix, additive=additive)
+    def plan(self, remote_rows: list[dict], additive: bool = False) -> list[PlanRow]:
+        """The verdicts for ``remote_rows`` against the lake as it is now."""
+        return plan_verdicts(
+            remote_rows, local_listing(self.root, self.prefix), self.prefix, additive
+        )
 
     def apply(
         self,
-        spark: SparkSession,
+        spark,
         remote_rows: list[dict],
         fetcher: Callable[[str, str], None],
         additive: bool = False,
     ) -> SyncSummary:
-        from pyspark.sql import Observation
-
-        # metrics_summary via observed metrics (df.observe — the Spark
-        # answer to the reference's hand-counted summary dict,
-        # sync-canvas-data-files.py:50-54,125-139): CollectMetrics rides
-        # the apply action, so the counts cost no extra job. The filter
-        # below cannot push past the observe node, so metrics see every
-        # reconciled file.
-        obs = Observation("sync_metrics")
-        observed = self.plan(spark, remote_rows, additive=additive).observe(
-            obs,
-            F.count(F.lit(1)).alias("total"),
-            F.sum((F.col("verdict") == "fetch").cast("long")).alias("fetch"),
-            F.sum((F.col("verdict") == "skip").cast("long")).alias("skip"),
-            F.sum((F.col("verdict") == "delete").cast("long")).alias("delete"),
-        )
-        work = observed.filter(F.col("verdict").isin("fetch", "delete"))
-        known_failed: list[str] = []
+        """Plan, then fetch/delete the work list. ``spark`` is unused: the
+        sync core is metadata work and runs no Spark job."""
+        plan = self.plan(remote_rows, additive=additive)
+        counts = Counter(r.verdict for r in plan)
+        work = [r for r in plan if r.verdict != "skip"]
+        known_failed: set[str] = set()
         if self.max_files_per_run is not None:
             # bounded converge: a deterministic key-ordered prefix of the
-            # work list (TakeOrdered — the cap is driver-bounded); the
-            # remainder is simply not dispatched and the next run's plan
-            # picks it up (fetched files verdict 'skip' then). Keys that
-            # failed in earlier bounded runs sort LAST so they cannot pin
-            # the prefix and starve later-keyed work (see
+            # work list; the remainder is simply not dispatched and the next
+            # run's plan picks it up (fetched files verdict 'skip' then).
+            # Keys that failed in earlier bounded runs sort LAST so they
+            # cannot pin the prefix and starve later-keyed work (see
             # max_files_per_run docstring).
-            known_failed = self._load_failed_keys()
-            if known_failed:
-                # Plan-size trade: isin() compiles the ledger into an
-                # IN-literal inside the sort expression — bounded by
-                # FAILED_KEYS_CAP (10k keys, ~1 MB of plan). Beyond that
-                # cap a broadcast flag-join (left join a tiny failed-keys
-                # DF, sort on the null-ness of the flag) would keep the
-                # plan size constant; at the documented cap the literal is
-                # simpler and avoids an extra join node.
-                work = work.orderBy(
-                    F.col("key").isin(known_failed).asc(), F.col("key").asc()
-                )
-            else:
-                work = work.orderBy("key")
-            work = work.limit(int(self.max_files_per_run))
+            known_failed = set(self._load_failed_keys())
+            work = sorted(work, key=lambda r: (r.key in known_failed, r.key))
+            work = work[: int(self.max_files_per_run)]
 
         if self.dry_run:
-            work_rows = work.collect()
-            statuses = [
-                (r["key"], "would fetch" if r["verdict"] == "fetch" else "would delete")
-                for r in work_rows
-            ]
-            for key, action in sorted(statuses)[: self.log_sample_cap]:
-                self.log.append(f"DRY RUN: {action} {key}")
-            if len(statuses) > self.log_sample_cap:
-                self.log.append(
-                    f"DRY RUN: ... ({len(statuses) - self.log_sample_cap} more files)"
-                )
+            outcomes = [(r.key, f"would {r.verdict}") for r in work]
         else:
-            # Fetch/delete fan-out ON THE EXECUTORS (the Spark-native analog
-            # of the reference's one-Lambda-per-file dispatch,
-            # sync-canvas-data-files.py:78-84): the work list is repartitioned
-            # across tasks and each task runs the idempotence-guarded fetch
-            # body (fetch-canvas-data-file.py:25-38) with an I/O thread pool.
-            # Total parallelism = max_fetch_tasks x io_threads, none of it
-            # serialized through the driver. Per-file outcomes are rolled up
-            # EXECUTOR-SIDE by a chained narrow stage (same job — the
-            # side-effectful worker runs exactly once): each batch reduces
-            # to (action, count, bounded key sample), so the driver holds
-            # O(tasks x actions) rows no matter how many millions of files
-            # the manifest lists. The per-file Lambda-log analog survives as
-            # a capped sample (``log_sample_cap``).
-            n_tasks = max(1, self.max_fetch_tasks)
-            per_batch_cap = max(1, self.log_sample_cap // n_tasks)
-            if self.max_files_per_run is not None:
-                # bounded mode needs COMPLETE per-key outcomes to maintain
-                # the failed-keys ledger; total dispatched work is already
-                # <= max_files_per_run, so the rollup stays driver-bounded
-                per_batch_cap = max(per_batch_cap, int(self.max_files_per_run))
-            rolled = (
-                work.repartition(n_tasks)
-                .mapInPandas(
-                    _apply_worker(self.root, fetcher, self.io_threads),
-                    "key string, action string",
-                )
-                .mapInPandas(
-                    _rollup_worker(per_batch_cap),
-                    "action string, n long, sample array<string>",
-                )
-                .collect()
-            )
-            totals: dict[str, int] = {}
-            samples: list[tuple[str, str]] = []
-            for r in rolled:
-                totals[r["action"]] = totals.get(r["action"], 0) + int(r["n"])
-                samples.extend((k, r["action"]) for k in r["sample"])
-            shown = sorted(samples)[: self.log_sample_cap]
-            for key, action in shown:
-                self.log.append(f"{action}: {key}")
-            omitted = sum(totals.values()) - len(shown)
-            if omitted > 0:
+            workers = max(1, self.max_fetch_tasks) * max(1, self.io_threads)
+            with ThreadPoolExecutor(max_workers=max(1, min(workers, len(work)))) as pool:
+                actions = pool.map(lambda r: apply_file(self.root, r, fetcher), work)
+                outcomes = [(r.key, a) for r, a in zip(work, actions)]
+        # the per-file Lambda-log analog, as a sorted sample of at most
+        # log_sample_cap lines
+        shown = sorted(outcomes)[: self.log_sample_cap]
+        omitted = len(outcomes) - len(shown)
+        if self.dry_run:
+            self.log.extend(f"DRY RUN: {action} {key}" for key, action in shown)
+            if omitted:
+                self.log.append(f"DRY RUN: ... ({omitted} more files)")
+        else:
+            self.log.extend(f"{action}: {key}" for key, action in shown)
+            if omitted:
                 self.log.append(
                     f"... ({omitted} more files; log sampled at {self.log_sample_cap})"
                 )
 
-        metrics = obs.get
-        # plan-level counts from the observed metrics; failure count from
-        # the executor rollup (actions beginning "failed") — plan counts
-        # stay the verdict totals (sync_metrics_summary parity), failures
-        # report how much of the fetch plan did NOT land this run
-        n_failed = 0
-        n_applied = 0
-        if not self.dry_run:
-            n_failed = sum(
-                int(t) for a, t in totals.items() if a.startswith("failed")
-            )
-            n_applied = sum(int(t) for t in totals.values())
+        # plan counts stay the verdict totals (sync_metrics_summary parity);
+        # failures report how much of the work list did NOT land this run
+        failed_now = {k for k, a in outcomes if a.startswith("failed")}
         summary = SyncSummary(
-            total_files=int(metrics["total"]),
-            files_fetched=int(metrics["fetch"] or 0),
-            files_skipped=int(metrics["skip"] or 0),
-            files_removed=int(metrics["delete"] or 0),
-            files_failed=n_failed,
+            total_files=len(plan),
+            files_fetched=counts["fetch"],
+            files_skipped=counts["skip"],
+            files_removed=counts["delete"],
+            files_failed=len(failed_now),
             files_remaining=(
-                0
-                if self.dry_run or self.max_files_per_run is None
-                else max(
-                    0,
-                    int(metrics["fetch"] or 0)
-                    + int(metrics["delete"] or 0)
-                    - n_applied,
-                )
+                0 if self.dry_run else counts["fetch"] + counts["delete"] - len(outcomes)
             ),
             dry_run=self.dry_run,
         )
         if not self.dry_run and self.max_files_per_run is not None:
-            if summary.files_remaining == 0 and summary.files_failed == 0:
-                # Converged cleanly. In MIRROR mode the plan is a full-outer
-                # join enumerating every remote AND local key, so a ledger
-                # key absent from it exists on neither side — no future plan
-                # can ever cover it, and keeping it would waste cap space in
-                # the 10k-bounded ledger forever (round-9 advice). Covered
-                # keys were just applied cleanly. Both cases drop: clear the
-                # whole ledger, no collect needed.
-                if not additive:
-                    self._store_failed_keys(set())
-                # An ADDITIVE dump-mode run's manifest never mentions keys
-                # that failed in a prior snapshot run; deleting those
-                # entries would hand them back their prefix-pinning power
-                # on the next bounded snapshot sync (round-8 advice) — drop
-                # only the keys THIS run's plan actually covered. The
-                # coverage check re-evaluates the plan filtered to the
-                # ledger keys: <= FAILED_KEYS_CAP rows, only on this path.
-                elif known_failed:
-                    covered = {
-                        r["key"]
-                        for r in self.plan(spark, remote_rows, additive=additive)
-                        .filter(F.col("key").isin(known_failed))
-                        .select("key")
-                        .collect()
-                    }
-                    self._store_failed_keys(set(known_failed) - covered)
-                else:
-                    self._store_failed_keys(set())
+            if summary.files_remaining == 0 and not failed_now:
+                # Converged cleanly. A MIRROR plan enumerates every remote
+                # AND local key, so a ledger key absent from it exists on
+                # neither side and no future plan can cover it; covered
+                # keys were just applied cleanly — clear the whole ledger.
+                # An ADDITIVE dump-mode plan never mentions keys that failed
+                # in a prior snapshot run; dropping those would hand them
+                # back their prefix-pinning power on the next bounded
+                # snapshot sync, so drop only the keys this plan covered.
+                keep = known_failed - {r.key for r in plan} if additive else set()
+                self._store_failed_keys(keep)
             else:
-                failed_now = {k for k, a in samples if a.startswith("failed")}
-                ok_now = {k for k, a in samples if not a.startswith("failed")}
-                self._store_failed_keys((set(known_failed) | failed_now) - ok_now)
+                ok_now = {k for k, _ in outcomes} - failed_now
+                self._store_failed_keys((known_failed | failed_now) - ok_now)
         if summary.files_remaining > 0:
             self.log.append(
                 f"continuation: {summary.files_remaining} work items remain "
@@ -367,16 +279,12 @@ class SyncEngine:
     #: inherit the deprioritization. Same atomic tmp+rename discipline as
     #: the dump watermark.
     FAILED_KEYS_FILE = "_sync_failed_keys.json"
-    #: Hard cap on the ledger: the deprioritization rides an IN expression
-    #: in the sort key, so it must stay literal-sized. More failures than
-    #: this means the origin is broken, not the scheduler; excess keys just
-    #: fall back to natural key order.
+    #: Hard cap on the ledger. More failures than this means the origin is
+    #: broken, not the scheduler; excess keys just fall back to natural key
+    #: order.
     FAILED_KEYS_CAP = 10_000
 
     def _load_failed_keys(self) -> list[str]:
-        import json
-        import os
-
         path = os.path.join(self.root, self.FAILED_KEYS_FILE)
         if not os.path.exists(path):
             return []
@@ -385,9 +293,6 @@ class SyncEngine:
         return [str(k) for k in keys][: self.FAILED_KEYS_CAP]
 
     def _store_failed_keys(self, keys: set[str]) -> None:
-        import json
-        import os
-
         path = os.path.join(self.root, self.FAILED_KEYS_FILE)
         if not keys:
             if os.path.exists(path):
@@ -408,9 +313,6 @@ class SyncEngine:
     DUMP_STATE_FILE = "_dump_sync_state.json"
 
     def last_synced_sequence(self) -> int:
-        import json
-        import os
-
         path = os.path.join(self.root, self.DUMP_STATE_FILE)
         if not os.path.exists(path):
             return -1
@@ -418,9 +320,6 @@ class SyncEngine:
             return int(json.load(f).get("last_sequence", -1))
 
     def _write_synced_sequence(self, sequence: int) -> None:
-        import json
-        import os
-
         path = os.path.join(self.root, self.DUMP_STATE_FILE)
         os.makedirs(self.root, exist_ok=True)
         tmp = path + ".tmp"
@@ -430,7 +329,7 @@ class SyncEngine:
 
     def sync_dumps(
         self,
-        spark: SparkSession,
+        spark,
         client,
         fetcher: Callable[[str, str], None],
     ) -> list[tuple[str, SyncSummary]]:
@@ -438,14 +337,18 @@ class SyncEngine:
         API (``get_dumps(after=...)``), apply each IN SEQUENCE ORDER as an
         additive reconcile (fetch-only — a dump manifest never implies
         deletion of files it doesn't list), and advance the watermark after
-        each dump so a crash resumes at the first unapplied dump.
+        each fully landed dump so a crash resumes at the first unapplied one.
 
         ``client`` needs ``get_dumps(after=...)`` and
         ``dump_manifest_rows(dump_id)`` (``CanvasDataClient`` provides
         both). Returns ``[(dump_id, summary), ...]`` for the dumps applied.
         Unfinished dumps are skipped (still being written portal-side) and
         NOT watermarked past, so they are retried next run — matching the
-        at-least-once semantics of the snapshot mode's idempotent fetch.
+        at-least-once semantics of the snapshot mode's idempotent fetch. A
+        dump that did not fully land (a failed fetch, or files left by
+        ``max_files_per_run``) is returned but not watermarked, and later
+        dumps wait for the next run, which fetches what is missing. A dry
+        run never moves the watermark.
         """
         after = self.last_synced_sequence()
         dumps = client.get_dumps(after=after if after >= 0 else None)
@@ -460,8 +363,11 @@ class SyncEngine:
         for d in ready:
             rows = client.dump_manifest_rows(d["dumpId"])
             summary = self.apply(spark, rows, fetcher, additive=True)
-            self._write_synced_sequence(d["sequence"])
             results.append((d["dumpId"], summary))
+            if summary.files_failed or summary.files_remaining:
+                break
+            if not self.dry_run:
+                self._write_synced_sequence(d["sequence"])
         return results
 
 
@@ -471,93 +377,12 @@ def json_line_notifier(path: str) -> Callable[[SyncSummary], None]:
     dict (sync-canvas-data-files.py:141-145, topic at
     canvas_data_aws.yaml:68-78). Any messaging sink plugs in the same way
     via ``SyncEngine.on_summary``."""
-    import json
 
     def _notify(summary: SyncSummary) -> None:
         with open(path, "a") as f:
             f.write(json.dumps(summary.as_dict(), sort_keys=True) + "\n")
 
     return _notify
-
-
-def _apply_worker(root: str, fetcher: Callable[[str, str], None], io_threads: int):
-    """Task body for the distributed apply: runs on executors via
-    mapInPandas. One (key, verdict, url) row in, one (key, action) row out.
-
-    The idempotence guard lives HERE, inside the task, exactly like the
-    reference worker's existence check (fetch-canvas-data-file.py:25-31) —
-    a racing duplicate dispatch sees the destination and skips. Deletes are
-    the mirror semantics of sync-canvas-data-files.py:104-112. ``fetcher``
-    is cloudpickled to the workers, so it must not rely on driver-side
-    mutable state for its effect.
-    """
-    import os
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _one(key: str, verdict: str, url: str | None) -> str:
-        # Per-file failure ISOLATION, matching the reference's
-        # one-Lambda-per-file blast radius: a single permanently-failing
-        # URL must not abort the whole sync job (an uncaught raise here
-        # fails the Spark task and with it every other file's work). The
-        # failure is reported as its own action; the file stays absent, so
-        # the NEXT converge run re-plans it as a fetch — eventual
-        # consistency through idempotent re-runs, exactly the reference's
-        # daily-retry semantics.
-        dest = os.path.join(root, key)
-        try:
-            if verdict == "delete":
-                if os.path.exists(dest):
-                    os.remove(dest)
-                    return "deleted"
-                return "already absent"
-            if os.path.exists(dest):
-                return "skip (exists)"
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            fetcher(url, dest)
-            return "fetched"
-        except Exception as e:  # noqa: BLE001 — isolate ANY per-file failure
-            return f"failed ({type(e).__name__})"
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            with ThreadPoolExecutor(max_workers=max(1, io_threads)) as pool:
-                actions = list(
-                    pool.map(_one, pdf["key"], pdf["verdict"], pdf["url"])
-                )
-            yield pd.DataFrame({"key": pdf["key"], "action": actions})
-
-    return _worker
-
-
-def _rollup_worker(sample_cap: int):
-    """Executor-side status rollup chained after ``_apply_worker`` (narrow,
-    same stage — no extra job, no re-execution of fetch side effects): each
-    (key, action) batch reduces to one row per action carrying the count
-    and at most ``sample_cap`` sorted keys. Keeps the driver's status
-    traffic bounded at any manifest size."""
-
-    def _roll(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            grouped = pdf.groupby("action", sort=True)["key"]
-            yield pd.DataFrame(
-                {
-                    "action": grouped.count().index,
-                    "n": grouped.count().values,
-                    "sample": [
-                        sorted(keys)[:sample_cap] for _, keys in grouped
-                    ],
-                }
-            )
-
-    return _roll
 
 
 def copy_fetcher(chunk_bytes: int = 8 * 1024 * 1024) -> Callable[[str, str], None]:

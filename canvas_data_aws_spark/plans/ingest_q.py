@@ -8,9 +8,47 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from canvas_data_aws_spark.ingest.reconciler import reconcile
+from canvas_data_aws_spark.ingest.reconciler import RAW_PREFIX
 from canvas_data_aws_spark.plans.registry import register
 from canvas_data_aws_spark.sources.parquet import load_table
+
+
+def with_key(manifest: DataFrame, prefix: str = RAW_PREFIX) -> DataFrame:
+    """partition_by_table: key = '{prefix}{table}/{filename}'."""
+    return manifest.withColumn(
+        "key", F.concat(F.lit(prefix), F.col("table"), F.lit("/"), F.col("filename"))
+    )
+
+
+def reconcile(
+    remote: DataFrame,
+    local: DataFrame,
+    prefix: str = RAW_PREFIX,
+    additive: bool = False,
+) -> DataFrame:
+    """The sync engine's verdicts (``ingest.reconciler.plan_verdicts``) as
+    ONE join over a remote manifest DataFrame (table, filename, url) and a
+    local listing DataFrame (key).
+
+    Mirror mode (default): full-outer join; verdict in ('skip', 'fetch',
+    'delete'). The two anti-joins of the reference fall out of one exchange
+    instead of two. Additive mode (``additive=True``): left join from the
+    remote manifest; verdict in ('skip', 'fetch') only.
+    """
+    r = with_key(remote, prefix).alias("r")
+    l = local.select(F.col("key").alias("lkey")).alias("l")
+    how = "left_outer" if additive else "full_outer"
+    joined = r.join(l, F.col("r.key") == F.col("l.lkey"), how)
+    verdict = F.when(F.col("l.lkey").isNull(), F.lit("fetch"))
+    if not additive:
+        verdict = verdict.when(F.col("r.key").isNull(), F.lit("delete"))
+    return joined.select(
+        F.coalesce(F.col("r.key"), F.col("l.lkey")).alias("key"),
+        F.col("r.table").alias("table"),
+        F.col("r.filename").alias("filename"),
+        F.col("r.url").alias("url"),
+        verdict.otherwise(F.lit("skip")).alias("verdict"),
+    )
 
 
 def _remote_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,6 +196,4 @@ def partition_by_table_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("o_orderkey").cast("string"), F.lit(".gz")).alias("filename"),
         F.lit(None).cast("string").alias("url"),
     )
-    from canvas_data_aws_spark.ingest.reconciler import with_key
-
     return with_key(o).select("key", F.col("table").alias("table_name"))

@@ -292,3 +292,90 @@ def test_dump_sync_stops_at_unfinished_dump(api_srv, spark, tmp_path):
     applied = engine.sync_dumps(spark, _client(api_srv), http_fetcher(backoff_s=0.01))
     assert [dump_id for dump_id, _ in applied] == ["d1"]
     assert engine.last_synced_sequence() == 1
+
+
+def _three_dumps(api_srv):
+    """d1 and d3 ship one file each; d2 ships two, the second failable."""
+    (f1, f2) = sorted(FILE_BODIES)
+    api_srv.dumps = [
+        {"dumpId": f"d{i}", "sequence": i, "finished": True} for i in (1, 2, 3)
+    ]
+    api_srv.dump_files = {"d1": [f1], "d2": [f1, f2], "d3": [f2]}
+    return f2
+
+
+def test_dump_sync_stops_at_failed_dump(api_srv, spark, tmp_path):
+    """A dump with a failed fetch is returned but not watermarked, and
+    later dumps wait: the next run fetches the missing file, applies the
+    rest and moves the watermark to the end."""
+    import os
+
+    from canvas_data_aws_spark.ingest.fetchers import http_fetcher
+    from canvas_data_aws_spark.ingest.reconciler import SyncEngine
+
+    table, bad = _three_dumps(api_srv)
+    fetch = http_fetcher(backoff_s=0.01)
+
+    def failing(url, dest):
+        if url.endswith(bad):
+            raise OSError("injected fetch failure")
+        fetch(url, dest)
+
+    engine = SyncEngine(root=str(tmp_path), max_fetch_tasks=2, io_threads=2)
+    applied = engine.sync_dumps(spark, _client(api_srv), failing)
+    assert [dump_id for dump_id, _ in applied] == ["d1", "d2"]
+    assert applied[1][1].files_failed == 1
+    assert engine.last_synced_sequence() == 1
+    assert not os.path.exists(tmp_path / "raw_files" / table / bad)
+
+    applied = engine.sync_dumps(spark, _client(api_srv), fetch)
+    assert [dump_id for dump_id, _ in applied] == ["d2", "d3"]
+    assert applied[0][1].files_fetched == 1 and applied[0][1].files_skipped == 1
+    assert all(s.files_failed == 0 for _, s in applied)
+    assert engine.last_synced_sequence() == 3
+    for (t, filename), body in FILE_BODIES.items():
+        assert (tmp_path / "raw_files" / t / filename).read_bytes() == body
+
+
+def test_dump_sync_bounded_run_holds_watermark(api_srv, spark, tmp_path):
+    """A dump that max_files_per_run leaves partly applied is not
+    watermarked, so its remaining files are not skipped forever."""
+    from canvas_data_aws_spark.ingest.fetchers import http_fetcher
+    from canvas_data_aws_spark.ingest.reconciler import SyncEngine
+
+    api_srv.dumps = [
+        {"dumpId": f"d{i}", "sequence": i, "finished": True} for i in (1, 2)
+    ]
+    api_srv.dump_files = {"d1": sorted(FILE_BODIES), "d2": sorted(FILE_BODIES)[:1]}
+    fetch = http_fetcher(backoff_s=0.01)
+    engine = SyncEngine(root=str(tmp_path), max_files_per_run=1)
+    applied = engine.sync_dumps(spark, _client(api_srv), fetch)
+    assert [dump_id for dump_id, _ in applied] == ["d1"]
+    assert applied[0][1].files_remaining == 1
+    assert engine.last_synced_sequence() == -1
+
+    applied = engine.sync_dumps(spark, _client(api_srv), fetch)
+    assert [dump_id for dump_id, _ in applied] == ["d1", "d2"]
+    assert engine.last_synced_sequence() == 2
+    for (t, filename), body in FILE_BODIES.items():
+        assert (tmp_path / "raw_files" / t / filename).read_bytes() == body
+
+
+def test_dry_run_dump_sync_leaves_watermark(api_srv, spark, tmp_path):
+    """A dry run reports every ready dump but moves no watermark, so the
+    next real run still applies them all."""
+    from canvas_data_aws_spark.ingest.fetchers import http_fetcher
+    from canvas_data_aws_spark.ingest.reconciler import SyncEngine
+
+    _three_dumps(api_srv)
+    fetch = http_fetcher(backoff_s=0.01)
+    dry = SyncEngine(root=str(tmp_path), dry_run=True)
+    applied = dry.sync_dumps(spark, _client(api_srv), fetch)
+    assert [dump_id for dump_id, _ in applied] == ["d1", "d2", "d3"]
+    assert dry.last_synced_sequence() == -1
+    assert not (tmp_path / "raw_files").exists()
+
+    real = SyncEngine(root=str(tmp_path))
+    applied = real.sync_dumps(spark, _client(api_srv), fetch)
+    assert [dump_id for dump_id, _ in applied] == ["d1", "d2", "d3"]
+    assert real.last_synced_sequence() == 3

@@ -7,8 +7,9 @@ import pyspark.sql.functions as F
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from canvas_data_aws_spark.ingest.reconciler import RAW_PREFIX, reconcile
+from canvas_data_aws_spark.ingest.reconciler import RAW_PREFIX, plan_verdicts
 from canvas_data_aws_spark.operators.text import FP_BASE, FP_MOD
+from canvas_data_aws_spark.plans.ingest_q import reconcile
 
 _names = st.sets(
     st.text(alphabet="abcdef0123456789", min_size=1, max_size=6), min_size=0, max_size=12
@@ -30,7 +31,9 @@ def _get_spark():
 @given(remote=_names, local=_names)
 def test_reconcile_verdict_partition(remote, local):
     """Verdicts partition the key universe exactly like set algebra:
-    fetch = remote-local, delete = local-remote, skip = intersection."""
+    fetch = remote-local, delete = local-remote (mirror mode only),
+    skip = intersection — and the engine's Python planner and the
+    DataFrame ``reconcile`` agree on every key, in both modes."""
     spark = _get_spark()
     remote_rows = [{"table": "t", "filename": f"{n}.gz", "url": None} for n in sorted(remote)]
     from pyspark.sql import Row
@@ -50,12 +53,23 @@ def test_reconcile_verdict_partition(remote, local):
         [Row(key=f"{RAW_PREFIX}t/{n}.gz") for n in sorted(local)],
         StructType([StructField("key", StringType())]),
     )
-    plan = {r["key"]: r["verdict"] for r in reconcile(remote_df, local_df).collect()}
-
     key = lambda n: f"{RAW_PREFIX}t/{n}.gz"
-    assert {k for k, v in plan.items() if v == "fetch"} == {key(n) for n in remote - local}
-    assert {k for k, v in plan.items() if v == "delete"} == {key(n) for n in local - remote}
-    assert {k for k, v in plan.items() if v == "skip"} == {key(n) for n in remote & local}
+    local_keys = {key(n) for n in local}
+    for additive in (False, True):
+        plan = {
+            r["key"]: r["verdict"]
+            for r in reconcile(remote_df, local_df, additive=additive).collect()
+        }
+        py_plan = {
+            r.key: r.verdict
+            for r in plan_verdicts(remote_rows, local_keys, additive=additive)
+        }
+        assert py_plan == plan
+
+        assert {k for k, v in plan.items() if v == "fetch"} == {key(n) for n in remote - local}
+        deletes = set() if additive else {key(n) for n in local - remote}
+        assert {k for k, v in plan.items() if v == "delete"} == deletes
+        assert {k for k, v in plan.items() if v == "skip"} == {key(n) for n in remote & local}
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))

@@ -7,11 +7,10 @@ from __future__ import annotations
 import os
 
 from canvas_data_aws_spark.ingest.reconciler import (
+    PlanRow,
     SyncEngine,
+    apply_file,
     copy_fetcher,
-    local_listing,
-    manifest_from_rows,
-    reconcile,
 )
 
 
@@ -30,13 +29,11 @@ def _touch(root, *keys):
             f.write(f"data:{k}")
 
 
-def test_verdicts(spark, tmp_path):
+def test_verdicts(tmp_path):
     root = str(tmp_path)
     _touch(root, "users/a.gz", "users/b.gz", "courses/old.gz")
-    remote = manifest_from_rows(spark, _remote("users/a.gz", "users/b.gz", "users/c.gz"))
-    local = local_listing(spark, root)
-    plan = reconcile(remote, local)
-    verdicts = {r["key"]: r["verdict"] for r in plan.collect()}
+    plan = SyncEngine(root=root).plan(_remote("users/a.gz", "users/b.gz", "users/c.gz"))
+    verdicts = {r.key: r.verdict for r in plan}
     assert verdicts == {
         "raw_files/users/a.gz": "skip",
         "raw_files/users/b.gz": "skip",
@@ -44,8 +41,8 @@ def test_verdicts(spark, tmp_path):
         "raw_files/courses/old.gz": "delete",
     }
     # key layout parity: raw_files/{table}/{filename} (sync-canvas-data-files.py:60)
-    fetch = [r for r in plan.collect() if r["verdict"] == "fetch"][0]
-    assert fetch["table"] == "users" and fetch["filename"] == "c.gz"
+    fetch = [r for r in plan if r.verdict == "fetch"][0]
+    assert fetch.table == "users" and fetch.filename == "c.gz"
 
 
 def test_apply_converges_to_mirror(spark, tmp_path):
@@ -84,15 +81,11 @@ def test_apply_converges_to_mirror(spark, tmp_path):
 
 
 def test_idempotence_guard_skips_existing(spark, tmp_path):
-    """Double-dispatch race defused INSIDE the task body: a 'fetch' verdict
-    whose destination already exists is skipped without calling the fetcher
-    (fetch-canvas-data-file.py:25-31). Exercised directly on the executor
-    worker function so the race (plan says fetch, file appears before the
-    task runs) is reproducible."""
-    import pandas as pd
-
-    from canvas_data_aws_spark.ingest.reconciler import _apply_worker
-
+    """Double-dispatch race defused INSIDE the per-file body: a 'fetch'
+    verdict whose destination already exists is skipped without calling the
+    fetcher (fetch-canvas-data-file.py:25-31). Exercised directly on
+    ``apply_file`` so the race (plan says fetch, file appears before the
+    fetch runs) is reproducible."""
     root = str(tmp_path)
     _touch(root, "users/a.gz")
     original = open(os.path.join(root, "raw_files/users/a.gz")).read()
@@ -100,24 +93,17 @@ def test_idempotence_guard_skips_existing(spark, tmp_path):
     def clobber(url, dest):
         open(dest, "w").write("CLOBBERED")
 
-    worker = _apply_worker(root, clobber, io_threads=2)
-    batch = pd.DataFrame(
-        {
-            "key": ["raw_files/users/a.gz", "raw_files/users/new.gz"],
-            "verdict": ["fetch", "fetch"],
-            "url": ["file:///x", "file:///y"],
-        }
-    )
-    out = pd.concat(list(worker(iter([batch]))))
-    actions = dict(zip(out["key"], out["action"]))
-    assert actions["raw_files/users/a.gz"] == "skip (exists)"
-    assert actions["raw_files/users/new.gz"] == "fetched"
+    def fetch_row(name, url):
+        return PlanRow(f"raw_files/users/{name}", "users", name, url, "fetch")
+
+    assert apply_file(root, fetch_row("a.gz", "file:///x"), clobber) == "skip (exists)"
+    assert apply_file(root, fetch_row("new.gz", "file:///y"), clobber) == "fetched"
     # guard prevented the fetcher from running on the existing file
     assert open(os.path.join(root, "raw_files/users/a.gz")).read() == original
     assert open(os.path.join(root, "raw_files/users/new.gz")).read() == "CLOBBERED"
 
-    # end-to-end: once a file exists, reconcile verdicts it 'skip' so the
-    # distributed apply never even dispatches it
+    # end-to-end: once a file exists, the plan verdicts it 'skip' so apply
+    # never even dispatches it
     engine = SyncEngine(root=root)
     summary = engine.apply(
         spark,
@@ -128,38 +114,40 @@ def test_idempotence_guard_skips_existing(spark, tmp_path):
     assert open(os.path.join(root, "raw_files/users/a.gz")).read() == original
 
 
-def test_apply_runs_on_executors(spark, tmp_path):
-    """The fetch fan-out is distributed: each fetch records the Python
-    worker PID it ran in; with the driver untouched, at least one fetch
-    happens outside the driver process and the side effects land on disk."""
+def test_apply_bounds_fetch_concurrency(tmp_path):
+    """The fetch fan-out is one driver-side pool of max_fetch_tasks x
+    io_threads workers: fetches overlap, never more than that many run at
+    once, and every file is fetched exactly once."""
+    import threading
+    import time
+    from collections import Counter
+
     root = str(tmp_path / "lake")
-    src = tmp_path / "srcdata"
-    os.makedirs(src)
-    for i in range(20):
-        (src / f"f{i}.gz").write_text(f"payload-{i}")
+    lock = threading.Lock()
+    in_flight, peak, calls = 0, 0, Counter()
 
-    def pid_stamping_fetcher(url, dest):
-        import os as _os
-
-        srcpath = url.removeprefix("file://")
-        open(dest, "w").write(open(srcpath).read() + f":pid={_os.getpid()}")
+    def counting_fetcher(url, dest):
+        nonlocal in_flight, peak
+        with lock:
+            in_flight += 1
+            peak = max(peak, in_flight)
+            calls[url] += 1
+        time.sleep(0.01)
+        open(dest, "w").write(url)
+        with lock:
+            in_flight -= 1
 
     remote = [
-        {"table": "users", "filename": f"f{i}.gz", "url": f"file://{src}/f{i}.gz"}
-        for i in range(20)
+        {"table": "users", "filename": f"f{i}.gz", "url": f"noop://f{i}"} for i in range(40)
     ]
-    engine = SyncEngine(root=root, max_fetch_tasks=4)
-    summary = engine.apply(spark, remote, pid_stamping_fetcher)
-    assert summary.files_fetched == 20
-
-    pids = set()
-    for i in range(20):
-        body = open(os.path.join(root, f"raw_files/users/f{i}.gz")).read()
-        payload, pid = body.rsplit(":pid=", 1)
-        assert payload == f"payload-{i}"
-        pids.add(int(pid))
-    assert os.getpid() not in pids, "fetch ran in the driver process"
-    assert len(engine.log) == 20 and all(l.startswith("fetched:") for l in engine.log)
+    engine = SyncEngine(root=root, max_fetch_tasks=3, io_threads=2)
+    summary = engine.apply(None, remote, counting_fetcher)
+    assert summary.files_fetched == 40 and summary.files_failed == 0
+    assert 1 < peak <= 3 * 2
+    assert calls == Counter({r["url"]: 1 for r in remote})
+    for r in remote:
+        assert open(os.path.join(root, "raw_files/users", r["filename"])).read() == r["url"]
+    assert len(engine.log) == 40 and all(l.startswith("fetched:") for l in engine.log)
 
 
 def test_on_summary_notifier(spark, tmp_path):
@@ -204,9 +192,9 @@ def test_dry_run_no_side_effects(spark, tmp_path):
 
 
 def test_apply_bounded_driver_log_at_scale(spark, tmp_path):
-    """100k-file manifest: the driver must hold only the executor-side
-    rollup (per-action counts + a capped key sample), never the full
-    per-file status list — while SyncSummary counts stay exact."""
+    """100k-file manifest: the driver log keeps only a capped key sample,
+    never the full per-file status list — while SyncSummary counts stay
+    exact."""
     root = str(tmp_path / "lake")
     n = 100_000
     remote = [
