@@ -14,7 +14,6 @@ the named query registry:
     python -m canvas_data_aws_spark link --sf-dir /data/sf0.1 --out /entities
     python -m canvas_data_aws_spark compact --state-dir /state [--force]
         [--verdicts-dir /verdicts --expire-verdicts-before N]
-    python -m canvas_data_aws_spark bench
 
 ``sync`` resolves credentials secret-file-first/env-fallback (the
 reference's secrets path), pulls the snapshot manifest from the API, and
@@ -206,14 +205,6 @@ def _cmd_assemble(args: argparse.Namespace) -> int:
         split=args.split,
     )
     print(json.dumps(summary))
-    return 0
-
-
-def _cmd_bench(_args: argparse.Namespace) -> int:
-    import importlib
-
-    bench = importlib.import_module("bench")
-    bench.main()
     return 0
 
 
@@ -422,9 +413,6 @@ def main(argv: list[str] | None = None) -> int:
         "default keeps whole documents (no-split batch packing)",
     )
     pa.set_defaults(fn=_cmd_assemble)
-
-    pb = sub.add_parser("bench", help="run the headline bench (bench.py)")
-    pb.set_defaults(fn=_cmd_bench)
 
     pn = sub.add_parser("lint", help="scale-lint a query's physical plan")
     pn.add_argument("name", help="query name, or --all")

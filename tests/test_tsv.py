@@ -7,6 +7,8 @@ from __future__ import annotations
 import gzip
 import os
 
+import pytest
+
 from canvas_data_aws_spark.sources.schema import table_struct
 from canvas_data_aws_spark.sources.tsv import read_tsv_gzip, write_tsv_gzip
 
@@ -132,3 +134,32 @@ def test_events_ts_loads_across_physical_encodings(spark, tmp_path):
         ]),
     ).write.mode("overwrite").parquet(f"{d_ns}/events.parquet")
     check(d_ns)
+
+
+@pytest.mark.parametrize("encoding", ["nanos_long", "ntz_micros", "timestamp"])
+def test_events_ts_encodings(spark, tmp_path, encoding):
+    """sources/parquet.py footer-dtype dispatch: all three historical
+    events.ts encodings load to identical session-TZ TIMESTAMP values."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from canvas_data_aws_spark.sources.parquet import load_table
+
+    base = dt.datetime(2024, 3, 1, 12, 30, 45, 123456)
+    times = [base + dt.timedelta(seconds=i) for i in range(5)]
+    if encoding == "nanos_long":
+        arr = pa.array([int(t.timestamp() * 1e6) * 1000 for t in times], pa.timestamp("ns"))
+    elif encoding == "ntz_micros":
+        arr = pa.array(times, pa.timestamp("us"))
+    else:
+        arr = pa.array(times, pa.timestamp("us", tz="UTC"))
+    table = pa.table({"event_id": pa.array(range(5), pa.int64()), "ts": arr})
+    d = tmp_path / encoding
+    d.mkdir()
+    pq.write_table(table, str(d / "events.parquet"))
+    df = load_table(spark, str(d), "events")
+    assert df.schema["ts"].dataType.typeName() == "timestamp"
+    got = sorted(r["ts"].replace(tzinfo=None) for r in df.collect())
+    assert got == times, (encoding, got[:2], times[:2])

@@ -3,11 +3,11 @@ regressions.
 
 tests/test_plan_audit.py asserts ~60 TARGETED plan properties (pushdown
 reaches the scan, dims broadcast, top-k fuses...). This tool is the
-BREADTH complement: for every batch HEADLINE query it records a
-normalized histogram of the physical plan's operator labels (node name,
-plus the partitioning kind for exchanges and the join type for joins)
-into ``tools/plan_fingerprints.json``, and the suite fails on ANY drift
-from the committed ledger — a lost broadcast, a new exchange, a join
+BREADTH complement: for every query keyed in the committed ledger
+(``tools/plan_fingerprints.json``) it records a normalized histogram of
+the physical plan's operator labels (node name, plus the partitioning
+kind for exchanges and the join type for joins), and the suite fails on
+ANY drift from the ledger — a lost broadcast, a new exchange, a join
 strategy flip, or a scan multiplying shows up as a named diff even for
 queries no targeted predicate covers.
 
@@ -19,7 +19,8 @@ on the unexecuted frame — what the optimizer commits to before runtime
 stats, i.e. the part the repo's code controls).
 
 Usage:
-    python tools/plan_fingerprint.py --update      # regenerate the ledger
+    python tools/plan_fingerprint.py --update      # regenerate the ledger's keys
+    python tools/plan_fingerprint.py --update q1   # add or refresh named queries
     python tools/plan_fingerprint.py [--check]     # rebuild + diff, rc 1 on drift
     python tools/plan_fingerprint.py --check q1 q2 # restrict to named queries
 
@@ -40,16 +41,6 @@ sys.path.insert(0, REPO)
 
 LEDGER = os.path.join(REPO, "tools", "plan_fingerprints.json")
 SF_DIR = "/root/testdata/sf0.001"
-
-#: HEADLINE entries NOT fingerprinted, each with the reason. Streaming
-#: entries run live micro-batch machinery in their constructor and return
-#: a sink read-back whose plan is a trivial scan — the interesting plan
-#: is inside foreachBatch, covered by the streaming tests instead.
-EXCLUDED: dict[str, str] = {
-    "stream_tumbling_window": "streaming: constructor awaits a live query",
-    "stream_session_window": "streaming: constructor awaits a live query",
-    "stream_stream_join": "streaming: constructor awaits two live queries",
-}
 
 _JOIN_NODES = (
     "SortMergeJoin",
@@ -91,14 +82,11 @@ def signature(df) -> dict[str, int]:
 
 
 def fingerprint_names() -> list[str]:
-    """The gated set: every batch HEADLINE query (EXCLUDED carries the
-    reasons for the rest). Registry-resolved so a renamed query can't
-    leave a stale ledger key behind silently."""
-    import bench
-    from canvas_data_aws_spark.plans.registry import all_queries
-
-    registry = all_queries()
-    return [n for n in bench.HEADLINE if n in registry and n not in EXCLUDED]
+    """The gated set: the committed ledger's keys. Streaming entries stay
+    out of it: their constructors await live queries and return a sink
+    read-back whose plan is a trivial scan."""
+    with open(LEDGER) as f:
+        return list(json.load(f))
 
 
 def build(names: list[str] | None = None) -> dict[str, dict[str, int]]:
@@ -110,11 +98,11 @@ def build(names: list[str] | None = None) -> dict[str, dict[str, int]]:
     out: dict[str, dict[str, int]] = {}
     for n in names or fingerprint_names():
         out[n] = signature(registry[n].fn(spark, SF_DIR))
-        # Per-query cache isolation (same discipline as bench.py): a query
-        # that persists an intermediate would otherwise leak it into the
-        # CacheManager, and LATER queries whose analyzed plans contain the
-        # same subtree get cache-substituted — their recorded fingerprint
-        # would then depend on run ORDER, not on their own plan.
+        # Per-query cache isolation: a query that persists an
+        # intermediate would otherwise leak it into the CacheManager, and
+        # LATER queries whose analyzed plans contain the same subtree get
+        # cache-substituted — their recorded fingerprint would then depend
+        # on run ORDER, not on their own plan.
         spark.catalog.clearCache()
         try:
             for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
@@ -153,10 +141,7 @@ def main(argv: list[str]) -> int:
         if names and os.path.exists(LEDGER):
             with open(LEDGER) as f:
                 ledger = json.load(f)
-        ledger.update(fresh)
-        # drop ledger keys that left the fingerprint set
-        keep = set(fingerprint_names())
-        ledger = {k: v for k, v in sorted(ledger.items()) if k in keep}
+        ledger = dict(sorted({**ledger, **fresh}.items()))
         with open(LEDGER, "w") as f:
             json.dump(ledger, f, indent=1)
         print(f"wrote {len(ledger)} fingerprints to {LEDGER}")

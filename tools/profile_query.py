@@ -2,7 +2,7 @@
 
 Usage: python tools/profile_query.py <query> [<query> ...] [--sf DIR] [--reps N]
 
-For each named registry query (HEADLINE or not) this:
+For each named registry query this:
 - times DataFrame construction (fn(spark, sf_dir) — includes any eager
   localCheckpoints the plan builds) separately from the noop-sink execution
   (guide §1.4), min-of-N reps each;
@@ -10,8 +10,8 @@ For each named registry query (HEADLINE or not) this:
 - writes .explain("formatted") to /tmp/plans/<query>.txt and prints the
   Exchange / join-node / Python-eval census from it (guide §7.2).
 
-One JVM for all named queries (JIT-warm after the first), matching the
-bench's steady-state rep. Intra-JVM min-of-N mirrors bench.py's min-of-2.
+One JVM for all named queries (JIT-warm after the first), so every rep
+after the first is a steady-state one.
 """
 
 from __future__ import annotations
