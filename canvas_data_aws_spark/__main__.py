@@ -24,6 +24,7 @@ thread pool of fetches and deletes); every fetch is HMAC-signed. Exit code is 0 
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import sys
 
@@ -56,14 +57,10 @@ def _cmd_query(args: argparse.Namespace) -> int:
 
 
 def _cmd_sync(args: argparse.Namespace) -> int:
-    from canvas_data_aws_spark.ingest.api_client import CanvasDataClient
-    from canvas_data_aws_spark.ingest.credentials import (
-        hmac_auth_headers,
-        resolve_credentials,
-    )
+    from canvas_data_aws_spark.ingest.api_client import CanvasDataClient, signed_headers
+    from canvas_data_aws_spark.ingest.credentials import resolve_credentials
     from canvas_data_aws_spark.ingest.fetchers import http_fetcher
     from canvas_data_aws_spark.ingest.reconciler import SyncEngine
-    from canvas_data_aws_spark.session import get_spark
 
     creds = resolve_credentials(secret_file=args.secret_file)
     client = CanvasDataClient(creds, **(
@@ -74,15 +71,16 @@ def _cmd_sync(args: argparse.Namespace) -> int:
         dry_run=args.dry_run,
         max_fetch_tasks=args.max_fetch_tasks,
         max_files_per_run=args.max_files_per_run,
-        on_summary=lambda s: print(json.dumps(s.as_dict())),
     )
-    spark = get_spark(app_name="cda-sync")
-    engine.apply(
-        spark,
+    summary = engine.apply(
+        None,  # the sync core runs no Spark job
         client.sync_manifest_rows(),
-        http_fetcher(headers=hmac_auth_headers(creds)),
+        http_fetcher(headers=functools.partial(signed_headers, creds, "GET")),
         additive=args.additive,
     )
+    # sink_notify analog: the reference publishes this summary to SNS
+    # (sync-canvas-data-files.py:141-145)
+    print(json.dumps(summary.as_dict()))
     return 0
 
 

@@ -25,11 +25,13 @@ leaked request cannot be replayed elsewhere or later.
 
 Scale/architecture notes: the API surface is metadata-only (file listings
 and schema documents, a few MB at most), so the client is a plain
-driver-side component — the actual data-plane transfer of the signed S3
-URLs it returns happens in ``SyncEngine.apply``'s fetch thread pool via
-``http_fetcher``. File URLs are pre-signed by the API (no auth header
-on the download itself), exactly like the reference worker's plain
-``requests.get`` of ``file_url`` (fetch-canvas-data-file.py:33).
+driver-side component — the actual data-plane transfer of the file URLs
+it returns happens in ``SyncEngine.apply``'s fetch thread pool via
+``http_fetcher``. Both callers (the ``sync`` verb and perfbench) sign those
+downloads too, with ``partial(signed_headers, creds, "GET")``, and the
+portal doubles in this repo check that signature. The reference worker
+instead sends a plain ``requests.get`` of ``file_url``
+(fetch-canvas-data-file.py:33) and relies on the URL's own pre-signature.
 """
 
 from __future__ import annotations
@@ -48,11 +50,9 @@ from email.utils import formatdate
 from typing import Any
 
 from canvas_data_aws_spark.ingest.credentials import ApiCredentials
+from canvas_data_aws_spark.ingest.fetchers import RETRYABLE_STATUS, TIMEOUT_S
 
 DEFAULT_BASE_URL = "https://portal.inshosteddata.com"
-
-#: transient statuses worth retrying (same policy as fetchers.RETRYABLE_STATUS)
-_RETRYABLE = frozenset({408, 429, 500, 502, 503, 504})
 
 
 class ApiError(Exception):
@@ -104,7 +104,6 @@ class CanvasDataClient:
 
     creds: ApiCredentials
     base_url: str = DEFAULT_BASE_URL
-    timeout_s: float = 60.0
     max_attempts: int = 4
     backoff_s: float = 0.5
 
@@ -183,14 +182,14 @@ class CanvasDataClient:
             for k, v in signed_headers(self.creds, "GET", url).items():
                 req.add_header(k, v)
             try:
-                with urllib.request.urlopen(req, timeout=self.timeout_s) as resp:
+                with urllib.request.urlopen(req, timeout=TIMEOUT_S) as resp:
                     return json.loads(resp.read().decode())
             except urllib.error.HTTPError as e:
                 last_err = e
-                if e.code not in _RETRYABLE:
+                if e.code not in RETRYABLE_STATUS:
                     raise ApiError(f"GET {path} failed: HTTP {e.code}") from e
-            except (urllib.error.URLError, ConnectionError, TimeoutError, OSError) as e:
-                last_err = e  # transient transport error: retry
+            except OSError as e:
+                last_err = e  # transient transport error (URLError, reset, timeout)
             except ValueError as e:
                 raise ApiError(f"GET {path} returned non-JSON body") from e
         raise ApiError(

@@ -7,17 +7,15 @@ store first — here a JSON file standing in for the managed secret, same
 ``{"api_key": ..., "api_secret": ...}`` shape — and fall back to the
 ``api_key`` / ``api_secret`` environment variables. The resolved pair feeds
 request signing (the reference hands it to its API client at :46; here
-``hmac_auth_headers`` produces a detached HMAC-SHA256 authorization header
-that ``http_fetcher(headers=...)`` attaches per request).
+``api_client.signed_headers`` signs every API call and, through
+``http_fetcher(headers=...)``, every file download).
 """
 
 from __future__ import annotations
 
-import hashlib
-import hmac
 import json
 import os
-from collections.abc import Callable, Mapping
+from collections.abc import Mapping
 from dataclasses import dataclass
 
 
@@ -54,17 +52,3 @@ def resolve_credentials(
             "no credentials: provide a secret_file or api_key/api_secret env vars"
         ) from e
 
-
-def hmac_auth_headers(creds: ApiCredentials) -> Callable[[str], dict[str, str]]:
-    """Per-URL signing callback for ``http_fetcher(headers=...)``: an
-    HMAC-SHA256 signature of the URL under the api_secret, presented as
-    ``Authorization: HMACAuth <key>:<sig>`` — the generic shape of the
-    HMAC scheme the reference's API client signs requests with."""
-
-    def _headers(url: str) -> dict[str, str]:
-        sig = hmac.new(
-            creds.api_secret.encode(), url.encode(), hashlib.sha256
-        ).hexdigest()
-        return {"Authorization": f"HMACAuth {creds.api_key}:{sig}"}
-
-    return _headers

@@ -43,22 +43,24 @@ class PlanRow(NamedTuple):
     verdict: str
 
 
-def local_listing(root: str, prefix: str = RAW_PREFIX) -> set[str]:
-    """source_local_listing: existing object keys under the prefix
+def local_listing(root: str) -> set[str]:
+    """source_local_listing: existing object keys under ``RAW_PREFIX``
     (the S3 listing at sync-canvas-data-files.py:38-43). Local-FS flavor:
-    walk ``root`` and return relative keys."""
-    base = os.path.join(root, prefix)
+    walk ``root`` and return relative keys. Hidden names are skipped, as
+    Spark's file index skips them: the fetcher stages partial downloads as
+    ``.{name}.part``, which are neither lake files nor deletions."""
+    base = os.path.join(root, RAW_PREFIX)
     return {
         os.path.relpath(os.path.join(dirpath, fn), root).replace(os.sep, "/")
         for dirpath, _dirs, files in os.walk(base)
         for fn in files
+        if not fn.startswith(".")
     }
 
 
 def plan_verdicts(
     remote_rows: Iterable[dict],
     local_keys: set[str],
-    prefix: str = RAW_PREFIX,
     additive: bool = False,
 ) -> list[PlanRow]:
     """diff_fetch_set + diff_delete_set over a remote manifest
@@ -73,7 +75,7 @@ def plan_verdicts(
     dump's files, so local files it doesn't mention (other tables, earlier
     dumps) are NOT deletions.
     """
-    remote = {f"{prefix}{r['table']}/{r['filename']}": r for r in remote_rows}
+    remote = {f"{RAW_PREFIX}{r['table']}/{r['filename']}": r for r in remote_rows}
     plan = [
         PlanRow(
             key, r["table"], r["filename"], r.get("url"),
@@ -132,8 +134,6 @@ class SyncSummary:
     #: work items beyond max_files_per_run, left for the next run
     #: (continuation_reinvoke analog — re-run to converge)
     files_remaining: int = 0
-    tables_created: int = 0
-    tables_updated: int = 0
     dry_run: bool = False
 
     def as_dict(self) -> dict:
@@ -144,22 +144,18 @@ class SyncSummary:
 class SyncEngine:
     """Snapshot-mirror sync: converge local state to the remote manifest.
 
-    ``fetcher(url, dest_path) -> None`` is pluggable (tests copy local
-    files; production streams HTTPS — the worker body of
-    fetch-canvas-data-file.py:14-42) and must be safe to call from several
-    threads at once. ``dry_run`` logs intent without side effects (the
-    reference's env-flag mode, sync-canvas-data-files.py:15).
+    ``fetcher(url, dest_path) -> None`` is pluggable
+    (``fetchers.http_fetcher`` streams http(s):// and file:// URLs — the
+    worker body of fetch-canvas-data-file.py:14-42) and must be safe to
+    call from several threads at once. ``dry_run`` logs intent without
+    side effects (the reference's env-flag mode, sync-canvas-data-files.py:15).
     """
 
     root: str
-    prefix: str = RAW_PREFIX
     dry_run: bool = False
-    fetch_chunk_bytes: int = 8 * 1024 * 1024  # worker chunk size parity (:20)
     #: fetch concurrency is max_fetch_tasks x io_threads pool workers
     max_fetch_tasks: int = 16
     io_threads: int = 8
-    on_summary: Callable[["SyncSummary"], None] | None = None  # sink_notify
-    log_sample_cap: int = 10_000  # max per-file lines the driver retains
     #: continuation_reinvoke analog (sync-canvas-data-files.py:88-98): the
     #: reference re-invokes itself when <30 s of Lambda budget remain,
     #: paginating the work list cursor-free across invocations. The SAME
@@ -177,13 +173,14 @@ class SyncEngine:
     #: drains), but can never pin the prefix. The ledger drops a key the run
     #: it succeeds and is deleted when a run converges cleanly.
     max_files_per_run: int | None = None
-    log: list[str] = field(default_factory=list)
+    log: list[str] = field(default_factory=list, init=False)
+
+    #: max per-file lines the driver retains in ``log``
+    LOG_SAMPLE_CAP = 10_000
 
     def plan(self, remote_rows: list[dict], additive: bool = False) -> list[PlanRow]:
         """The verdicts for ``remote_rows`` against the lake as it is now."""
-        return plan_verdicts(
-            remote_rows, local_listing(self.root, self.prefix), self.prefix, additive
-        )
+        return plan_verdicts(remote_rows, local_listing(self.root), additive)
 
     def apply(
         self,
@@ -217,8 +214,8 @@ class SyncEngine:
                 actions = pool.map(lambda r: apply_file(self.root, r, fetcher), work)
                 outcomes = [(r.key, a) for r, a in zip(work, actions)]
         # the per-file Lambda-log analog, as a sorted sample of at most
-        # log_sample_cap lines
-        shown = sorted(outcomes)[: self.log_sample_cap]
+        # LOG_SAMPLE_CAP lines
+        shown = sorted(outcomes)[: self.LOG_SAMPLE_CAP]
         omitted = len(outcomes) - len(shown)
         if self.dry_run:
             self.log.extend(f"DRY RUN: {action} {key}" for key, action in shown)
@@ -228,7 +225,7 @@ class SyncEngine:
             self.log.extend(f"{action}: {key}" for key, action in shown)
             if omitted:
                 self.log.append(
-                    f"... ({omitted} more files; log sampled at {self.log_sample_cap})"
+                    f"... ({omitted} more files; log sampled at {self.LOG_SAMPLE_CAP})"
                 )
 
         # plan counts stay the verdict totals (sync_metrics_summary parity);
@@ -265,11 +262,6 @@ class SyncEngine:
                 f"continuation: {summary.files_remaining} work items remain "
                 "(bounded run); re-run to converge"
             )
-        # sink_notify analog (sync-canvas-data-files.py:141-145): the
-        # reference publishes the run summary to SNS; here any callable
-        # sink (log, file, queue) observes the same payload.
-        if self.on_summary is not None:
-            self.on_summary(summary)
         return summary
 
     # -- bounded-converge failed-keys ledger ---------------------------------
@@ -370,33 +362,3 @@ class SyncEngine:
                 self._write_synced_sequence(d["sequence"])
         return results
 
-
-def json_line_notifier(path: str) -> Callable[[SyncSummary], None]:
-    """sink_notify: append the run summary as one JSON line to ``path`` —
-    the engine's stand-in for the reference's SNS publish of the summary
-    dict (sync-canvas-data-files.py:141-145, topic at
-    canvas_data_aws.yaml:68-78). Any messaging sink plugs in the same way
-    via ``SyncEngine.on_summary``."""
-
-    def _notify(summary: SyncSummary) -> None:
-        with open(path, "a") as f:
-            f.write(json.dumps(summary.as_dict(), sort_keys=True) + "\n")
-
-    return _notify
-
-
-def copy_fetcher(chunk_bytes: int = 8 * 1024 * 1024) -> Callable[[str, str], None]:
-    """A bounded-memory streamed copy (the worker's 8 MiB chunk loop,
-    fetch-canvas-data-file.py:20,33-38) for file:// urls — the test double
-    for the HTTPS streamer."""
-
-    def _fetch(url: str, dest: str) -> None:
-        src = url.removeprefix("file://")
-        with open(src, "rb") as fin, open(dest, "wb") as fout:
-            while True:
-                chunk = fin.read(chunk_bytes)
-                if not chunk:
-                    break
-                fout.write(chunk)
-
-    return _fetch

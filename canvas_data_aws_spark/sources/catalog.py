@@ -6,8 +6,8 @@ The reference upserts every table into AWS Glue so a SQL engine can query it
 is Spark's own (`spark.catalog` / metastore): register each table as an
 external datasource table over its directory, upserting on re-registration.
 
-Raw zone registers as headerless gzip TSV (reference serde fidelity,
-:177-202); curated zone registers as Parquet.
+Tables register in the ``default`` database as headerless gzip TSV
+(reference serde fidelity, :177-202).
 """
 
 from __future__ import annotations
@@ -50,13 +50,11 @@ def create_or_update_table(
     name: str,
     struct: StructType,
     location: str,
-    database: str = "default",
-    fmt: str = "csv",
 ) -> str:
     """Upsert one external table definition; returns 'created' | 'updated'
     (parity with create_or_update_table, sync-canvas-data-files.py:170-235,
     including its try-create-except-update control flow)."""
-    qualified = f"{database}.`{name}`"
+    qualified = f"default.`{name}`"
     exists = spark.catalog.tableExists(qualified)
     if exists:
         # schema evolution = replace the catalog entry (the reference calls
@@ -65,15 +63,10 @@ def create_or_update_table(
     # SQL string literals escape-process backslashes: '\N' on disk must be
     # spelled '\\N' in the DDL text.
     null_lit = NULL_MARKER.replace("\\", "\\\\")
-    options = (
-        f"sep '\\t', header 'false', nullValue '{null_lit}', compression 'gzip'"
-        if fmt == "csv"
-        else ""
-    )
-    opt_clause = f"OPTIONS ({options})" if options else ""
     spark.sql(
-        f"CREATE TABLE {qualified} ({_ddl_columns(struct)}) "
-        f"USING {fmt} {opt_clause} LOCATION '{location}'"
+        f"CREATE TABLE {qualified} ({_ddl_columns(struct)}) USING csv "
+        f"OPTIONS (sep '\\t', header 'false', nullValue '{null_lit}', compression 'gzip') "
+        f"LOCATION '{location}'"
     )
     return "updated" if exists else "created"
 
@@ -82,15 +75,13 @@ def register_schema(
     spark: SparkSession,
     schema: dict,
     base_location: str,
-    database: str = "default",
-    fmt: str = "csv",
 ) -> CatalogResult:
     """Apply create_or_update_table to every table in a Canvas-style schema
     dict (the catalog loop, sync-canvas-data-files.py:114-122)."""
     result = CatalogResult()
     for table_name, struct in schema_registry(schema).items():
         verdict = create_or_update_table(
-            spark, table_name, struct, f"{base_location}/{table_name}", database, fmt
+            spark, table_name, struct, f"{base_location}/{table_name}"
         )
         if verdict == "created":
             result.created += 1
@@ -98,38 +89,3 @@ def register_schema(
             result.updated += 1
     return result
 
-
-def analyze_table(
-    spark: SparkSession,
-    name: str,
-    columns: list[str] | None = None,
-    database: str = "default",
-) -> dict:
-    """Collect catalog statistics for a registered table — the maintenance
-    step that feeds Spark's cost-based optimizer (table sizeInBytes/rowCount
-    drive join-strategy and join-REORDER decisions; column min/max/ndv/null
-    counts drive filter selectivity estimates). The reference has no
-    analog: Athena reads Glue entries with no statistics, so every plan is
-    rule-only. At 100 TB the difference is broadcast-vs-shuffle decisions
-    made from measured sizes instead of file-size guesses.
-
-    Returns {'size_bytes': int|None, 'row_count': int|None} parsed back
-    from the catalog (None when the metastore omits a figure).
-    """
-    qualified = f"{database}.`{name}`"
-    spark.sql(f"ANALYZE TABLE {qualified} COMPUTE STATISTICS")
-    if columns:
-        collist = ", ".join(f"`{c}`" for c in columns)
-        spark.sql(f"ANALYZE TABLE {qualified} COMPUTE STATISTICS FOR COLUMNS {collist}")
-    stats: dict = {"size_bytes": None, "row_count": None}
-    for row in spark.sql(f"DESCRIBE TABLE EXTENDED {qualified}").collect():
-        if row["col_name"] == "Statistics":
-            # e.g. "12345 bytes, 678 rows"
-            parts = row["data_type"].split(",")
-            for p in parts:
-                p = p.strip()
-                if p.endswith("bytes"):
-                    stats["size_bytes"] = int(p.split()[0])
-                elif p.endswith("rows"):
-                    stats["row_count"] = int(p.split()[0])
-    return stats

@@ -90,33 +90,3 @@ def test_register_schema_counts(spark, tmp_path):
     for t in ("a_dim", "b_fact"):
         spark.sql(f"DROP TABLE default.`{t}`")
 
-
-def test_analyze_table_feeds_cbo(spark, sf_dir, tmp_path):
-    """analyze_table must land rowCount/sizeInBytes in the catalog entry
-    and column-level stats (min/max/ndv) for requested columns — the
-    inputs Spark's cost-based optimizer uses for join sizing."""
-    import shutil as _sh
-
-    from canvas_data_aws_spark.sources.catalog import analyze_table
-
-    loc = str(tmp_path / "nation_parq")
-    _sh.copytree(f"{sf_dir}/nation.parquet", loc) if __import__("os").path.isdir(
-        f"{sf_dir}/nation.parquet"
-    ) else _sh.copy(f"{sf_dir}/nation.parquet", loc)
-    spark.sql("DROP TABLE IF EXISTS default.`nation_stats_t`")
-    spark.sql(f"CREATE TABLE default.`nation_stats_t` USING parquet LOCATION '{loc}'")
-    try:
-        stats = analyze_table(spark, "nation_stats_t", columns=["n_nationkey"])
-        true_rows = spark.table("default.`nation_stats_t`").count()
-        assert stats["row_count"] == true_rows
-        assert stats["size_bytes"] and stats["size_bytes"] > 0
-        desc = {
-            r["info_name"]: r["info_value"]
-            for r in spark.sql(
-                "DESCRIBE TABLE EXTENDED default.`nation_stats_t` n_nationkey"
-            ).collect()
-        }
-        assert int(desc["distinct_count"]) > 0
-        assert desc["min"] is not None
-    finally:
-        spark.sql("DROP TABLE IF EXISTS default.`nation_stats_t`")

@@ -1,24 +1,18 @@
 """secrets_resolution parity: secret-store-first/env-fallback credential
-resolution (sync-canvas-data-files.py:17-24) and signed-header delivery
-through the HTTP fetcher."""
+resolution (sync-canvas-data-files.py:17-24). Signed delivery of the
+resolved pair is tested through the ``sync`` verb in test_api_client.py."""
 
 from __future__ import annotations
 
-import hashlib
-import hmac
 import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
 from canvas_data_aws_spark.ingest.credentials import (
     ApiCredentials,
     CredentialsError,
-    hmac_auth_headers,
     resolve_credentials,
 )
-from canvas_data_aws_spark.ingest.fetchers import http_fetcher
 
 
 def test_secret_file_wins(tmp_path):
@@ -42,31 +36,3 @@ def test_no_source_raises():
     with pytest.raises(CredentialsError):
         resolve_credentials(None, env={})
 
-
-def test_signed_headers_reach_the_server(tmp_path):
-    seen = {}
-
-    class H(BaseHTTPRequestHandler):
-        def log_message(self, *a):
-            pass
-
-        def do_GET(self):
-            seen["auth"] = self.headers.get("Authorization")
-            body = b"ok"
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        creds = ApiCredentials("key1", "sec1")
-        url = f"http://127.0.0.1:{srv.server_address[1]}/f.gz"
-        http_fetcher(headers=hmac_auth_headers(creds))(url, str(tmp_path / "f.gz"))
-    finally:
-        srv.shutdown()
-
-    expected_sig = hmac.new(b"sec1", url.encode(), hashlib.sha256).hexdigest()
-    assert seen["auth"] == f"HMACAuth key1:{expected_sig}"
-    assert (tmp_path / "f.gz").read_bytes() == b"ok"

@@ -17,7 +17,8 @@ import os
 import pyspark.sql.functions as F
 
 from canvas_data_aws_spark.ingest.compaction import compact_raw_tsv
-from canvas_data_aws_spark.ingest.reconciler import SyncEngine, copy_fetcher
+from canvas_data_aws_spark.ingest.fetchers import http_fetcher
+from canvas_data_aws_spark.ingest.reconciler import SyncEngine
 from canvas_data_aws_spark.sources.catalog import register_schema
 from canvas_data_aws_spark.sources.schema import schema_registry
 
@@ -67,7 +68,7 @@ def test_full_lifecycle(spark, tmp_path):
     # --- 1. sync: reconcile + streamed fetch ------------------------------
     lake = str(tmp_path / "lake")
     engine = SyncEngine(root=lake)
-    summary = engine.apply(spark, remote, copy_fetcher())
+    summary = engine.apply(spark, remote, http_fetcher())
     assert summary.files_fetched == 2 and summary.files_removed == 0
 
     # --- 2. catalog: typed external tables over the raw zone --------------
@@ -91,7 +92,7 @@ def test_full_lifecycle(spark, tmp_path):
     ]
 
     # --- 4. incremental re-sync: converged => all skips; drop a file ------
-    summary2 = SyncEngine(root=lake).apply(spark, remote[:1], copy_fetcher())
+    summary2 = SyncEngine(root=lake).apply(spark, remote[:1], http_fetcher())
     assert summary2.files_skipped == 1 and summary2.files_removed == 1  # mirror delete
 
     # --- 5. curated zone: compact the raw TSV to partition-sized parquet --

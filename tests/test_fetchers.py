@@ -17,8 +17,9 @@ BODY = b"0123456789abcdef" * 4096  # 64 KiB
 
 
 class _Handler(BaseHTTPRequestHandler):
-    """Serves BODY at /data. Behavior knobs live on the server object:
-    fail_first_n (connection drops mid-stream), support_range."""
+    """Serves the server's ``body`` (BODY by default) at /data. Behavior
+    knobs live on the server object: fail_first_n (connection drops
+    mid-stream), support_range; ``ranges`` records each Range header."""
 
     def log_message(self, *a):  # quiet
         pass
@@ -34,8 +35,9 @@ class _Handler(BaseHTTPRequestHandler):
             return
 
         start = 0
-        body = BODY
+        body = srv.body
         rng = self.headers.get("Range")
+        srv.ranges.append(rng)
         if rng and srv.support_range:
             start = int(rng.split("=")[1].rstrip("-"))
             self.send_response(206)
@@ -63,6 +65,8 @@ def http_srv():
     srv = ThreadingHTTPServer(("127.0.0.1", 0), _Handler)
     srv.fail_first_n = 0
     srv.support_range = True
+    srv.body = BODY
+    srv.ranges = []
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     yield srv
@@ -73,11 +77,17 @@ def _url(srv, path):
     return f"http://127.0.0.1:{srv.server_address[1]}{path}"
 
 
+def _staged(dest):
+    """Where the fetcher stages a partial download of ``dest``."""
+    folder, name = os.path.split(dest)
+    return os.path.join(folder, f".{name}.part")
+
+
 def test_plain_download(http_srv, tmp_path):
     dest = str(tmp_path / "out.bin")
     http_fetcher(chunk_bytes=4096)(_url(http_srv, "/data"), dest)
     assert open(dest, "rb").read() == BODY
-    assert not os.path.exists(dest + ".part")
+    assert not os.path.exists(_staged(dest))
 
 
 def test_retry_on_5xx(http_srv, tmp_path):
@@ -108,7 +118,7 @@ def test_terminal_404_raises_and_cleans_up(http_srv, tmp_path):
     dest = str(tmp_path / "out.bin")
     with pytest.raises(FetchError):
         http_fetcher(backoff_s=0.01)(_url(http_srv, "/missing"), dest)
-    assert not os.path.exists(dest) and not os.path.exists(dest + ".part")
+    assert not os.path.exists(dest) and not os.path.exists(_staged(dest))
 
 
 def test_retries_exhausted_raises(http_srv, tmp_path):
@@ -119,7 +129,7 @@ def test_retries_exhausted_raises(http_srv, tmp_path):
 
 
 def test_terminal_failure_keeps_part_for_cross_call_resume(http_srv, tmp_path):
-    """With resume=True, exhausting retries must NOT discard the .part —
+    """Exhausting retries must NOT discard the staged .part —
     a later apply() retry continues from the byte offset instead of
     refetching the whole file."""
     http_srv.fail_first_n = 99
@@ -128,22 +138,12 @@ def test_terminal_failure_keeps_part_for_cross_call_resume(http_srv, tmp_path):
         http_fetcher(chunk_bytes=1024, max_attempts=2, backoff_s=0.01)(
             _url(http_srv, "/truncate"), dest
         )
-    part = dest + ".part"
+    part = _staged(dest)
     assert os.path.exists(part) and 0 < os.path.getsize(part) < len(BODY)
     # the next call resumes from the kept offset and completes
     http_srv.fail_first_n = 0
     http_fetcher(chunk_bytes=1024, backoff_s=0.01)(_url(http_srv, "/truncate"), dest)
     assert open(dest, "rb").read() == BODY and not os.path.exists(part)
-
-
-def test_terminal_failure_without_resume_cleans_part(http_srv, tmp_path):
-    http_srv.fail_first_n = 99
-    dest = str(tmp_path / "out.bin")
-    with pytest.raises(FetchError):
-        http_fetcher(chunk_bytes=1024, max_attempts=2, backoff_s=0.01, resume=False)(
-            _url(http_srv, "/truncate"), dest
-        )
-    assert not os.path.exists(dest + ".part")
 
 
 def test_file_url_single_code_path(tmp_path):
@@ -154,9 +154,54 @@ def test_file_url_single_code_path(tmp_path):
     assert open(dest, "rb").read() == BODY
 
 
-def test_fetcher_is_picklable():
-    """The distributed apply cloudpickles fetchers to executors."""
-    import pickle
+def test_staged_part_is_invisible_to_readers_and_mirror_plan(http_srv, spark, tmp_path):
+    """A terminal mid-body failure leaves its partial download in the
+    table's directory for resume. Readers must not parse it as rows, a
+    mirror plan must neither list nor delete it, and the next run must
+    resume from it."""
+    import gzip
+    import random
 
-    f = http_fetcher()
-    assert callable(pickle.loads(pickle.dumps(f)))
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from canvas_data_aws_spark.ingest.reconciler import SyncEngine
+    from canvas_data_aws_spark.sources.tsv import read_tsv_gzip
+
+    rnd = random.Random(7)
+    src = tmp_path / "good.tsv.gz"
+    src.write_bytes(gzip.compress(b"".join(b"%d\tgood\n" % i for i in range(1000))))
+    http_srv.body = gzip.compress(
+        b"".join(b"%d\t%08x\n" % (i, rnd.getrandbits(32)) for i in range(1000, 3000))
+    )
+    http_srv.fail_first_n = 99
+    rows = [
+        {"table": "t", "filename": "good.tsv.gz", "url": f"file://{src}"},
+        {"table": "t", "filename": "bad.tsv.gz", "url": _url(http_srv, "/truncate")},
+    ]
+    root = str(tmp_path / "lake")
+    fetch = http_fetcher(chunk_bytes=1024, max_attempts=2, backoff_s=0)
+    s1 = SyncEngine(root=root).apply(None, rows, fetch)
+    assert s1.files_failed == 1
+    table_dir = os.path.join(root, "raw_files", "t")
+    (part,) = [os.path.join(table_dir, f) for f in os.listdir(table_dir) if f.endswith(".part")]
+    staged = os.path.getsize(part)
+    assert 0 < staged < len(http_srv.body)
+
+    schema = StructType([StructField("id", LongType()), StructField("name", StringType())])
+    got = read_tsv_gzip(spark, table_dir, schema).collect()
+    assert len(got) == 1000
+    assert {(r["id"], r["name"]) for r in got} == {(i, "good") for i in range(1000)}
+
+    plan = SyncEngine(root=root).plan(rows)
+    assert {r.key: r.verdict for r in plan} == {
+        "raw_files/t/good.tsv.gz": "skip",
+        "raw_files/t/bad.tsv.gz": "fetch",
+    }
+
+    http_srv.fail_first_n = 0
+    http_srv.ranges.clear()
+    s2 = SyncEngine(root=root).apply(None, rows, fetch)
+    assert (s2.files_failed, s2.files_removed) == (0, 0)
+    assert http_srv.ranges == [f"bytes={staged}-"]
+    assert open(os.path.join(table_dir, "bad.tsv.gz"), "rb").read() == http_srv.body
+    assert not os.path.exists(part)

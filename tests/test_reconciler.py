@@ -6,12 +6,8 @@ from __future__ import annotations
 
 import os
 
-from canvas_data_aws_spark.ingest.reconciler import (
-    PlanRow,
-    SyncEngine,
-    apply_file,
-    copy_fetcher,
-)
+from canvas_data_aws_spark.ingest.fetchers import http_fetcher
+from canvas_data_aws_spark.ingest.reconciler import PlanRow, SyncEngine, apply_file
 
 
 def _remote(*names):
@@ -57,7 +53,7 @@ def test_apply_converges_to_mirror(spark, tmp_path):
         {"table": "users", "filename": "c.gz", "url": f"file://{src}/c.gz"},
     ]
     engine = SyncEngine(root=root)
-    summary = engine.apply(spark, remote, copy_fetcher())
+    summary = engine.apply(spark, remote, http_fetcher())
     assert summary.as_dict() == {
         "total_files": 3,
         "files_fetched": 1,
@@ -65,8 +61,6 @@ def test_apply_converges_to_mirror(spark, tmp_path):
         "files_removed": 1,
         "files_failed": 0,
         "files_remaining": 0,
-        "tables_created": 0,
-        "tables_updated": 0,
         "dry_run": False,
     }
     assert open(os.path.join(root, "raw_files/users/c.gz")).read() == "fresh-c"
@@ -74,7 +68,7 @@ def test_apply_converges_to_mirror(spark, tmp_path):
     assert os.path.exists(os.path.join(root, "raw_files/users/a.gz"))
 
     # second run: converged state => everything skips, nothing changes
-    summary2 = SyncEngine(root=root).apply(spark, remote, copy_fetcher())
+    summary2 = SyncEngine(root=root).apply(spark, remote, http_fetcher())
     assert summary2.files_fetched == 0
     assert summary2.files_skipped == 2
     assert summary2.files_removed == 0
@@ -150,30 +144,6 @@ def test_apply_bounds_fetch_concurrency(tmp_path):
     assert len(engine.log) == 40 and all(l.startswith("fetched:") for l in engine.log)
 
 
-def test_on_summary_notifier(spark, tmp_path):
-    """sink_notify analog: the run summary is published to the pluggable
-    sink exactly once per apply (sync-canvas-data-files.py:141-145)."""
-    import json
-
-    from canvas_data_aws_spark.ingest.reconciler import json_line_notifier
-
-    root = str(tmp_path / "lake")
-    notify_path = str(tmp_path / "notify.jsonl")
-    _touch(root, "courses/old.gz")
-
-    engine = SyncEngine(root=root, on_summary=json_line_notifier(notify_path))
-    engine.apply(spark, [], copy_fetcher())
-    lines = [json.loads(l) for l in open(notify_path)]
-    assert len(lines) == 1
-    assert lines[0]["files_removed"] == 1 and lines[0]["dry_run"] is False
-
-    # dry-run publishes too (the reference notifies regardless of mode)
-    engine2 = SyncEngine(root=root, dry_run=True, on_summary=json_line_notifier(notify_path))
-    engine2.apply(spark, [{"table": "users", "filename": "n.gz", "url": "file:///x"}], copy_fetcher())
-    lines = [json.loads(l) for l in open(notify_path)]
-    assert len(lines) == 2 and lines[1]["dry_run"] is True
-
-
 def test_dry_run_no_side_effects(spark, tmp_path):
     root = str(tmp_path)
     _touch(root, "courses/old.gz")
@@ -181,7 +151,7 @@ def test_dry_run_no_side_effects(spark, tmp_path):
     summary = engine.apply(
         spark,
         [{"table": "users", "filename": "new.gz", "url": "file:///x"}],
-        copy_fetcher(),
+        http_fetcher(),
     )
     assert summary.dry_run is True
     assert summary.files_fetched == 1 and summary.files_removed == 1  # intended, not done
@@ -205,11 +175,11 @@ def test_apply_bounded_driver_log_at_scale(spark, tmp_path):
     def noop_fetcher(url, dest):
         open(dest, "w").close()
 
-    engine = SyncEngine(root=root, max_fetch_tasks=8, io_threads=8, log_sample_cap=500)
+    engine = SyncEngine(root=root, max_fetch_tasks=8, io_threads=8)
     summary = engine.apply(spark, remote, noop_fetcher)
     assert summary.total_files == n and summary.files_fetched == n
     # capped sample + one truncation notice — not 100k lines
-    assert len(engine.log) <= 501
+    assert len(engine.log) <= SyncEngine.LOG_SAMPLE_CAP + 1
     assert engine.log[-1].startswith("...") and "more files" in engine.log[-1]
     assert all(l.startswith("fetched:") for l in engine.log[:-1])
     # spot-check the side effects actually happened
@@ -227,7 +197,7 @@ def test_apply_log_complete_below_cap(spark, tmp_path):
     engine.apply(
         spark,
         [{"table": "users", "filename": "a.gz", "url": f"file://{src}/a.gz"}],
-        copy_fetcher(),
+        http_fetcher(),
     )
     assert engine.log == ["fetched: raw_files/users/a.gz"]
 
