@@ -9,9 +9,10 @@ gets vectorized reads, predicate pushdown, column pruning, and partition
 pruning for free.
 
 Scale levers:
-- ``target_rows_per_file`` bounds output file size (the small-files and the
-  giant-files problems both kill 100 TB scans); repartition count is derived
-  from the input estimate rather than hardcoded.
+- the scan's partitions set the parallelism and the output files (gzip is
+  unsplittable: one task per raw file); no count or shuffle precedes the
+  write. ``target_rows_per_file`` (``maxRecordsPerFile``) bounds file size:
+  the small-files and the giant-files problems both kill 100 TB scans.
 - ``partition_by`` turns full scans into directory-pruned scans for the
   given predicates (fixing the reference's PartitionKeys: []).
 - low-cardinality partitioning uses repartition(partition cols) first so
@@ -34,22 +35,18 @@ def compact_table(
     target_rows_per_file: int = 1_000_000,
     mode: str = "overwrite",
 ) -> None:
-    n = df.count()
-    n_files = max(1, (n + target_rows_per_file - 1) // target_rows_per_file)
     if partition_by:
         # co-locate rows of each partition value; file sizing within a
         # directory is then governed by maxRecordsPerFile
-        staged = df.repartition(*partition_by)
         (
-            staged.write.mode(mode)
+            df.repartition(*partition_by)
+            .write.mode(mode)
             .option("maxRecordsPerFile", target_rows_per_file)
             .partitionBy(*partition_by)
             .parquet(out_path)
         )
     else:
-        df.repartition(n_files).write.mode(mode).option(
-            "maxRecordsPerFile", target_rows_per_file
-        ).parquet(out_path)
+        df.write.mode(mode).option("maxRecordsPerFile", target_rows_per_file).parquet(out_path)
 
 
 def compact_raw_tsv(
@@ -59,13 +56,11 @@ def compact_raw_tsv(
     out_path: str,
     partition_by: list[str] | None = None,
     target_rows_per_file: int = 1_000_000,
-) -> DataFrame:
-    """gzip TSV table directory -> curated Parquet; returns the curated
-    DataFrame for verification, read back with the known ``schema`` so no
-    job re-infers it from the footers."""
+) -> None:
+    """gzip TSV table directory -> curated Parquet at ``out_path``, in one
+    Spark job. Read it back with the known ``schema``: no inference job."""
     raw = read_tsv_gzip(spark, raw_table_dir, schema)
     compact_table(raw, out_path, partition_by, target_rows_per_file)
-    return spark.read.schema(schema).parquet(out_path)
 
 
 def zorder_value(cols: list[Column], bits: int = 16) -> Column:
@@ -96,9 +91,9 @@ def zorder_write(
     the multi-dimensional data-skipping layout (Delta/Iceberg OPTIMIZE
     ZORDER, built here from first principles on plain parquet).
 
-    Each column is min-max normalized to ``bits`` bits using one stats pass
-    (at 100 TB: footer-only min/max aggregates), rows are range-partitioned
-    then locally sorted on the Morton key, and files are written size-capped.
+    One stats pass (at 100 TB: footer-only min/max/count aggregates)
+    min-max normalizes each column to ``bits`` bits and sizes the files;
+    rows are range-partitioned, sorted on the Morton key, written size-capped.
     A predicate on ANY z-column then skips most files/row-groups via
     parquet min/max stats — where a plain sort only skips on its leading
     column. Content is untouched (lossless rewrite; the oracle gate checks
@@ -111,6 +106,7 @@ def zorder_write(
     stats = df.agg(
         *[F.min(F.col(c).cast("double")).alias(f"__min_{c}") for c in zorder_by],
         *[F.max(F.col(c).cast("double")).alias(f"__max_{c}") for c in zorder_by],
+        F.count(F.lit(1)).alias("__n"),
     ).first()
     scale = (1 << bits) - 1
     norm_cols = []
@@ -126,11 +122,10 @@ def zorder_write(
                 * scale
             ).cast("bigint")
         )
-    keyed = df.withColumn("__z", zorder_value(norm_cols, bits))
-    n = keyed.count()
-    n_files = max(1, (n + target_rows_per_file - 1) // target_rows_per_file)
+    n_files = max(1, (stats["__n"] + target_rows_per_file - 1) // target_rows_per_file)
     (
-        keyed.repartitionByRange(n_files, "__z")
+        df.withColumn("__z", zorder_value(norm_cols, bits))
+        .repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode(mode)

@@ -45,6 +45,13 @@ class FetchError(Exception):
     """Terminal fetch failure after exhausting retries."""
 
 
+def staged_path(dest: str) -> str:
+    """Where a partial download of ``dest`` is staged: a hidden
+    ``.{name}.part`` next to it."""
+    folder, name = os.path.split(dest)
+    return os.path.join(folder, f".{name}.part")
+
+
 def http_fetcher(
     chunk_bytes: int = DEFAULT_CHUNK_BYTES,
     max_attempts: int = 4,
@@ -63,9 +70,8 @@ def http_fetcher(
     """
 
     def fetch(url: str, dest: str) -> None:
-        folder, name = os.path.split(dest)
-        part = os.path.join(folder, f".{name}.part")
-        os.makedirs(folder or ".", exist_ok=True)
+        part = staged_path(dest)
+        os.makedirs(os.path.dirname(dest) or ".", exist_ok=True)
         last_err: Exception | None = None
         for attempt in range(max_attempts):
             if attempt:

@@ -27,6 +27,8 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import NamedTuple
 
+from canvas_data_aws_spark.ingest.fetchers import staged_path
+
 #: Layout rule: every file lives under its table's directory
 #: (key construction, sync-canvas-data-files.py:60).
 RAW_PREFIX = "raw_files/"
@@ -189,8 +191,9 @@ class SyncEngine:
         fetcher: Callable[[str, str], None],
         additive: bool = False,
     ) -> SyncSummary:
-        """Plan, then fetch/delete the work list. ``spark`` is unused: the
-        sync core is metadata work and runs no Spark job."""
+        """Plan, then fetch/delete the work list; a mirror apply also drops
+        stale staged downloads. ``spark`` is unused: the sync core is
+        metadata work and runs no Spark job."""
         plan = self.plan(remote_rows, additive=additive)
         counts = Counter(r.verdict for r in plan)
         work = [r for r in plan if r.verdict != "skip"]
@@ -213,6 +216,8 @@ class SyncEngine:
             with ThreadPoolExecutor(max_workers=max(1, min(workers, len(work)))) as pool:
                 actions = pool.map(lambda r: apply_file(self.root, r, fetcher), work)
                 outcomes = [(r.key, a) for r, a in zip(work, actions)]
+            if not additive:
+                self._drop_stale_parts({r.key for r in plan if r.verdict != "delete"})
         # the per-file Lambda-log analog, as a sorted sample of at most
         # LOG_SAMPLE_CAP lines
         shown = sorted(outcomes)[: self.LOG_SAMPLE_CAP]
@@ -263,6 +268,23 @@ class SyncEngine:
                 "(bounded run); re-run to converge"
             )
         return summary
+
+    def _drop_stale_parts(self, remote_keys: set[str]) -> None:
+        """Mirror mode: delete staged partial downloads
+        (``fetchers.staged_path``) whose file left the remote manifest, since
+        no fetch will resume them. They are not lake files, so
+        ``files_removed`` does not count them."""
+        keep = {staged_path(k) for k in remote_keys}
+        for dirpath, _dirs, files in os.walk(os.path.join(self.root, RAW_PREFIX)):
+            for fn in files:
+                path = os.path.join(dirpath, fn)
+                key = os.path.relpath(path, self.root).replace(os.sep, "/")
+                if fn.startswith(".") and fn.endswith(".part") and key not in keep:
+                    try:
+                        os.remove(path)
+                        self.log.append(f"deleted stale staged download: {key}")
+                    except OSError as e:
+                        self.log.append(f"failed ({type(e).__name__}) to delete {key}")
 
     # -- bounded-converge failed-keys ledger ---------------------------------
 

@@ -98,9 +98,8 @@ def test_full_lifecycle(spark, tmp_path):
     # --- 5. curated zone: compact the raw TSV to partition-sized parquet --
     structs = schema_registry(CANVAS_SCHEMA)
     curated = str(tmp_path / "curated" / "user_dim")
-    cur_df = compact_raw_tsv(
-        spark, f"{lake}/raw_files/user_dim", structs["user_dim"], curated
-    )
+    compact_raw_tsv(spark, f"{lake}/raw_files/user_dim", structs["user_dim"], curated)
+    cur_df = spark.read.schema(structs["user_dim"]).parquet(curated)
     assert cur_df.count() == 3
     assert cur_df.filter(F.col("name").isNull()).count() == 1  # \N fidelity
 

@@ -205,3 +205,42 @@ def test_staged_part_is_invisible_to_readers_and_mirror_plan(http_srv, spark, tm
     assert http_srv.ranges == [f"bytes={staged}-"]
     assert open(os.path.join(table_dir, "bad.tsv.gz"), "rb").read() == http_srv.body
     assert not os.path.exists(part)
+
+
+def test_mirror_apply_drops_stale_staged_parts(http_srv, tmp_path):
+    """A staged download whose file left the remote manifest is deleted by
+    a mirror apply, and only by one: dry runs and additive (dump) applies
+    leave it. A staged download of a file still listed is kept, and its
+    next fetch resumes from it with a Range request."""
+    from canvas_data_aws_spark.ingest.reconciler import SyncEngine
+
+    root = str(tmp_path / "lake")
+    table_dir = os.path.join(root, "raw_files", "t")
+    os.makedirs(table_dir)
+    live = _staged(os.path.join(table_dir, "live.tsv.gz"))
+    gone = _staged(os.path.join(table_dir, "gone.tsv.gz"))
+    with open(live, "wb") as f:
+        f.write(BODY[:1000])
+    with open(gone, "wb") as f:
+        f.write(b"junk")
+    rows = [{"table": "t", "filename": "live.tsv.gz", "url": _url(http_srv, "/flaky5xx")}]
+    fetch = http_fetcher(max_attempts=1, backoff_s=0)
+
+    http_srv.fail_first_n = 99
+    dry_run, dump = SyncEngine(root=root, dry_run=True), SyncEngine(root=root)
+    for engine, additive in ((dry_run, False), (dump, True)):
+        engine.apply(None, rows, fetch, additive=additive)
+        assert os.path.exists(gone) and os.path.getsize(live) == 1000
+
+    s = SyncEngine(root=root).apply(None, rows, fetch)
+    assert (s.files_fetched, s.files_removed, s.files_failed) == (1, 0, 1)
+    assert not os.path.exists(gone)
+    assert os.path.getsize(live) == 1000
+
+    http_srv.fail_first_n = 0
+    http_srv.ranges.clear()
+    s = SyncEngine(root=root).apply(None, rows, fetch)
+    assert (s.files_fetched, s.files_removed, s.files_failed) == (1, 0, 0)
+    assert http_srv.ranges == ["bytes=1000-"]
+    assert open(os.path.join(table_dir, "live.tsv.gz"), "rb").read() == BODY
+    assert os.listdir(table_dir) == ["live.tsv.gz"]

@@ -12,6 +12,7 @@ from canvas_data_aws_spark.ingest.compaction import compact_raw_tsv, compact_tab
 from canvas_data_aws_spark.operators.skew import salted_join
 from canvas_data_aws_spark.sources.parquet import load_table
 from canvas_data_aws_spark.sources.schema import table_struct
+from canvas_data_aws_spark.sources.tsv import NULL_MARKER
 
 
 def test_salted_join_matches_plain_join(spark, sf_dir):
@@ -96,10 +97,30 @@ def test_salted_join_spreads_hot_key_across_tasks(spark, sf_dir):
     assert spread["n_tasks"] >= num_salts - 2, spread
 
 
+def _jobs_of(spark, group, call):
+    """Run ``call()`` under its own Spark job group; return how many jobs it
+    launched (AQE's background jobs inherit the group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_compact_table_partitioned_layout(spark, sf_dir, tmp_path):
     orders = load_table(spark, sf_dir, "orders")
     out = str(tmp_path / "curated_orders")
-    compact_table(orders, out, partition_by=["o_orderstatus"], target_rows_per_file=5000)
+    jobs = _jobs_of(
+        spark,
+        "compact-partitioned",
+        lambda: compact_table(
+            orders, out, partition_by=["o_orderstatus"], target_rows_per_file=5000
+        ),
+    )
+    # the shuffle that co-locates partition values, then the write; no count
+    assert jobs == 2
 
     dirs = {d for d in os.listdir(out) if d.startswith("o_orderstatus=")}
     statuses = {r[0] for r in orders.select("o_orderstatus").distinct().collect()}
@@ -128,10 +149,69 @@ def test_compact_raw_tsv_round_trip(spark, tmp_path):
         f.write("1\t1.5\n2\t\\N\n3\t2.25\n")
 
     out = str(tmp_path / "curated" / "t")
-    curated = compact_raw_tsv(spark, raw_dir, table_struct(table), out)
+    compact_raw_tsv(spark, raw_dir, table_struct(table), out)
+    curated = spark.read.schema(table_struct(table)).parquet(out)
     rows = sorted(map(tuple, curated.collect()))
     assert rows == [(1, 1.5), (2, None), (3, 2.25)]
     assert any(f.endswith(".parquet") for f in os.listdir(out))
+
+
+_T = {
+    "tableName": "t",
+    "columns": [
+        {"name": "id", "type": "bigint"},
+        {"name": "v", "type": "double precision"},
+        {"name": "name", "type": "varchar"},
+    ],
+}
+
+
+def test_compact_raw_tsv_is_one_narrow_write(spark, tmp_path):
+    """A multi-file raw table compacts in exactly one Spark job (no count,
+    no shuffle), the scan's partitions bound the output files, and a hidden
+    staged download in the table directory contributes no rows."""
+    raw_dir = tmp_path / "raw" / "t"
+    raw_dir.mkdir(parents=True)
+    good = []
+    for p in range(6):
+        rows = [(p * 100 + i, p + i / 4, f"n{p}-{i}") for i in range(5)]
+        if p == 3:
+            rows.append((999, None, "null-v"))
+        good += rows
+        body = "".join(f"{i}\t{NULL_MARKER if v is None else v}\t{n}\n" for i, v, n in rows)
+        with gzip.open(raw_dir / f"t-{p}.tsv.gz", "wt") as f:
+            f.write(body)
+    (raw_dir / ".t-6.tsv.gz.part").write_bytes(os.urandom(300))
+
+    out = str(tmp_path / "curated" / "t")
+    struct = table_struct(_T)
+    jobs = _jobs_of(
+        spark, "compact-raw-narrow", lambda: compact_raw_tsv(spark, str(raw_dir), struct, out)
+    )
+    assert jobs == 1
+    got = spark.read.schema(struct).parquet(out).collect()
+    assert sorted(map(tuple, got)) == sorted(good)
+    parts = [f for f in os.listdir(out) if f.startswith("part-") and f.endswith(".parquet")]
+    assert 1 <= len(parts) <= 6
+
+
+def test_compact_raw_tsv_empty_inputs(spark, tmp_path):
+    """An empty raw table directory, and one holding only a staged partial
+    download, each compact to a readable table with 0 rows whose footer
+    carries every schema column."""
+    struct = table_struct(_T)
+    empty = tmp_path / "raw" / "empty"
+    staged = tmp_path / "raw" / "staged"
+    empty.mkdir(parents=True)
+    staged.mkdir(parents=True)
+    (staged / ".t-0.tsv.gz.part").write_bytes(os.urandom(300))
+    for raw_dir in (empty, staged):
+        out = str(tmp_path / "curated" / raw_dir.name)
+        compact_raw_tsv(spark, str(raw_dir), struct, out)
+        back = spark.read.parquet(out)
+        assert back.columns == [f.name for f in struct.fields]
+        assert back.count() == 0
+
 
 def test_zorder_layout_narrows_file_spans_on_both_dims(spark, sf_dir, tmp_path):
     """The point of Z-order: per-file min/max footers must be narrow on
