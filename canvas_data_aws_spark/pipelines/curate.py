@@ -607,24 +607,10 @@ def curate(
     if persisted is not None:
         persisted.unpersist()
 
-    if _obs_n("clean") == 0:
-        # every document was filtered out: the partitionBy write left a
-        # schemaless empty directory, so the read-back below would raise
-        # 'unable to infer schema' and swallow the funnel (round-9 advice).
-        # Return the funnel directly — it IS the diagnosis.
-        return CurationFunnel(
-            n_raw=_obs_n("raw"),
-            n_quality=_obs_n("quality"),
-            n_exact=_obs_n("exact"),
-            n_near=_obs_n("near"),
-            n_train=_obs_n("train"),
-            n_clean=0,
-            n_batches=0,
-            n_shards=0,
-            out_dir=out_dir,
-        )
-
-    written = spark.read.parquet(out_dir)
+    # read back with the schema just written (shard, the partition column,
+    # is already last): no inference job, and an all-filtered run's empty
+    # directory reads as zero rows
+    written = spark.read.schema(final.schema).parquet(out_dir)
     n_batches, n_shards = written.agg(
         F.countDistinct("shard", "batch_id").alias("b"),
         F.countDistinct("shard").alias("s"),

@@ -48,6 +48,8 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.files.maxPartitionBytes": "128m",
     # --- correctness/determinism ---------------------------------------------
     "spark.sql.session.timeZone": "UTC",
+    # read parquet TIMESTAMP(NANOS) as bigint nanos; load_table converts events.ts
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # quiet the UI in test loops
     "spark.ui.enabled": "false",
 }

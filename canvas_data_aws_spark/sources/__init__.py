@@ -1,3 +1,3 @@
-from canvas_data_aws_spark.sources.parquet import TABLES, load_table, load_tables
+from canvas_data_aws_spark.sources.parquet import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["TABLES", "load_table"]

@@ -13,6 +13,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # The driver fixture corpus (TESTDATA.md): TPC-H-ish star schema + extension
 # tables for streaming / LLM-data operators.
@@ -32,46 +34,50 @@ TABLES: tuple[str, ...] = (
 # Small dimension tables — always broadcast-join candidates at any scale.
 SMALL_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier", "part", "customer"})
 
+# path -> (file identity, footer schema); see _read_parquet
+_SCHEMAS: dict[str, tuple[list, T.StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read ``path`` with its footer schema, inferred once per file identity:
+    inference is a Spark job, a read with an explicit schema launches none.
+    The identity is ``(name, st_mtime_ns, st_size)`` of every file under
+    ``path``, so a rewritten table is inferred afresh."""
+    files = [path] if os.path.isfile(path) else [
+        os.path.join(d, f) for d, _, names in os.walk(path) for f in names
+    ]
+    ident = sorted((f, st.st_mtime_ns, st.st_size) for f in files for st in [os.stat(f)])
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (ident, df.schema)
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table. Schema comes from the Parquet footer —
+    """Read one fixture table with the schema its Parquet footer declares —
     schemas are *declared*, never inferred from data (the reference registers
-    explicit typed columns; Parquet footers serve that role here).
+    explicit typed columns in its catalog; footers serve that role here).
+    The footer schema is resolved once per file identity, as a catalog
+    lookup would be: a repeat read then plans without a footer-scan job,
+    and rewritten files are resolved afresh.
 
     ``events.ts`` has shipped in three physical encodings across fixture
-    generations: parquet TIMESTAMP(NANOS) (read as long via the legacy conf,
-    then converted), TIMESTAMP(MICROS) timezone-naive (TIMESTAMP_NTZ), and
-    plain TIMESTAMP. Normalize all three to a session-TZ TIMESTAMP by
-    inspecting the footer dtype — never assume one encoding."""
-    # Timestamps are stored timezone-naive; DuckDB (and the oracle) read them
-    # as naive values, so Spark must render them in UTC regardless of the
-    # caller's session default — pin it (runtime-settable, idempotent).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            # Legacy nanos-as-long fixture: lossless nanos -> micros.
-            return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        if isinstance(ts_type, T.TimestampNTZType):
-            # Naive micros fixture: with the session TZ pinned to UTC this
-            # cast is a pure type relabel (identical wall-clock + epoch).
-            return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    generations: parquet TIMESTAMP(NANOS) (read as long via the session's
+    ``nanosAsLong`` default, then converted), TIMESTAMP(MICROS)
+    timezone-naive (TIMESTAMP_NTZ), and plain TIMESTAMP. Normalize all three
+    to a session-TZ TIMESTAMP (UTC, a ``get_spark`` default, as DuckDB reads
+    naive values) by the resolved ``ts`` type — never assume one encoding."""
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    if name != "events":
         return df
-    return spark.read.parquet(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every fixture table to Spark SQL by name (the engine-native
-    analog of the reference's Glue catalog registration)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        # Legacy nanos-as-long fixture: lossless nanos -> micros.
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, T.TimestampNTZType):
+        # Naive micros fixture: with the session TZ pinned to UTC this
+        # cast is a pure type relabel (identical wall-clock + epoch).
+        return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    return df

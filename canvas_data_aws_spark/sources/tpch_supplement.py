@@ -38,7 +38,7 @@ import tempfile
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from canvas_data_aws_spark.sources.parquet import load_table
+from canvas_data_aws_spark.sources.parquet import _read_parquet, load_table
 
 CACHE_ROOT = os.environ.get(
     "CDA_SUPPLEMENT_CACHE", os.path.join(tempfile.gettempdir(), "cda_tpch_supplement")
@@ -150,7 +150,7 @@ def ensure_partsupp(spark: SparkSession, sf_dir: str) -> str:
 
 
 def load_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(ensure_partsupp(spark, sf_dir))
+    return _read_parquet(spark, ensure_partsupp(spark, sf_dir))
 
 
 SHIP_MODES = ("REG AIR", "AIR", "RAIL", "SHIP", "TRUCK", "MAIL", "FOB")
@@ -221,7 +221,7 @@ def ensure_lineitem_ext(spark: SparkSession, sf_dir: str) -> str:
 
 
 def load_lineitem_ext(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(ensure_lineitem_ext(spark, sf_dir))
+    return _read_parquet(spark, ensure_lineitem_ext(spark, sf_dir))
 
 
 # view name -> ensure function: everything the local oracle gates register

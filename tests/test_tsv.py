@@ -163,3 +163,64 @@ def test_events_ts_encodings(spark, tmp_path, encoding):
     assert df.schema["ts"].dataType.typeName() == "timestamp"
     got = sorted(r["ts"].replace(tzinfo=None) for r in df.collect())
     assert got == times, (encoding, got[:2], times[:2])
+
+
+def _jobs_launched(spark, group, fn):
+    """Run ``fn`` under its own job group; return (result, jobs launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_resolves_schema_once(spark, tmp_path):
+    """The footer schema is inferred on the first read of a table only: a
+    second load_table of the same unchanged files plans without a job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from canvas_data_aws_spark.sources.parquet import load_table
+
+    pq.write_table(pa.table({"k": [1, 2, 3]}), str(tmp_path / "region.parquet"))
+    _, first = _jobs_launched(
+        spark, "schema-once-1", lambda: load_table(spark, str(tmp_path), "region")
+    )
+    df, second = _jobs_launched(
+        spark, "schema-once-2", lambda: load_table(spark, str(tmp_path), "region")
+    )
+    assert first >= 1 and second == 0, (first, second)
+    assert sorted(r["k"] for r in df.collect()) == [1, 2, 3]
+
+
+@pytest.mark.parametrize("layout", ["file", "dir"])
+def test_load_table_sees_rewritten_table(spark, tmp_path, layout):
+    """Overwriting a table at the same path with one more column is picked
+    up by the next load_table, for a single {name}.parquet file and for a
+    {name}.parquet/ directory of part files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from canvas_data_aws_spark.sources.parquet import load_table
+
+    path = tmp_path / "region.parquet"
+
+    def write(table):
+        if layout == "file":
+            pq.write_table(table, str(path))
+        else:
+            spark.createDataFrame(table.to_pandas()).write.mode("overwrite").parquet(
+                str(path)
+            )
+
+    write(pa.table({"k": pa.array([1, 2], pa.int64())}))
+    for _ in range(2):
+        assert load_table(spark, str(tmp_path), "region").columns == ["k"]
+    write(pa.table({"k": pa.array([1, 2], pa.int64()), "v": ["a", "b"]}))
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["k", "v"]
+    assert sorted(map(tuple, df.collect())) == [(1, "a"), (2, "b")]
